@@ -15,14 +15,6 @@ from pyspark.sql import functions as F
 
 from .materialize import materialize
 
-#: Output column names of the reference's summary (``lambda.py:185-188``).
-SUMMARY_COLUMNS = [
-    "max_units_sold",
-    "average_total_revenue",
-    "average_total_cost",
-    "average_total_profit",
-]
-
 #: Selection strategy for exact_percentiles / mad_spread.
 #: "histogram" (default): one map-side histogram aggregate locates the
 #: rank-crossing buckets and only those are rescanned — the fact table

@@ -42,6 +42,7 @@ _NUMERIC_TYPES = (
     T.DoubleType,
     T.DecimalType,
 )
+_TEMPORAL = (T.DateType, T.TimestampType, T.TimestampNTZType)
 
 
 @dataclass
@@ -100,9 +101,6 @@ def validate_batch(
     # every row (the pandas reference's to_datetime succeeds on
     # datetime64 regardless of format, so validation is idempotent
     # there).
-    from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
-
-    _TEMPORAL = (DateType, TimestampType, TimestampNTZType)
     aggs: list[Column] = []
     date_checks: list[str] = []
     temporal_dates: set[str] = set()
@@ -142,20 +140,31 @@ def validate_batch(
         ):
             errors.append(f"Duplicate {key} values found")
 
-    out = df
-    if not errors:
-        # Successful validation casts date columns in place, matching the
-        # reference's mutate-on-success (lambda.py:107).  Temporal
-        # columns truncate straight to DateType — re-parsing their ISO
-        # string form with the M/d/yyyy format would null them.
-        for c in date_checks:
-            out = out.withColumn(
+    out = df if errors else cast_dates(df, date_checks, date_format)
+    return ValidationResult(df=out, errors=errors)
+
+
+def cast_dates(
+    df: DataFrame,
+    dates: list[str] | None = None,
+    date_format: str = SALES_DATE_FORMAT,
+) -> DataFrame:
+    """V3's success cast: every present date column to DateType in
+    place, matching the reference's mutate-on-success
+    (``lambda.py:107``).  Temporal columns truncate straight to
+    DateType; re-parsing their ISO string form with ``M/d/yyyy`` would
+    null them."""
+    dates = SALES_DATE_COLUMNS if dates is None else dates
+    dtypes = {f.name: f.dataType for f in df.schema.fields}
+    for c in dates:
+        if c in dtypes:
+            df = df.withColumn(
                 c,
                 F.to_date(F.col(c))
-                if c in temporal_dates
+                if isinstance(dtypes[c], _TEMPORAL)
                 else F.to_date(F.col(c).cast("string"), date_format),
             )
-    return ValidationResult(df=out, errors=errors)
+    return df
 
 
 def row_rules_sales(date_format: str = SALES_DATE_FORMAT) -> dict[str, Column]:

@@ -11,6 +11,9 @@ Reproduces ``lambda_handler`` (reference ``lambda.py:204-266``):
 with the serving-table dataflow of ``update_rds_tables``
 (``lambda.py:160-194``): append log ``sales``, keyed keep-last upsert
 into ``sales_tgt``, per-country ``sales_summary`` replace.
+:func:`land_valid_batch` is the one landing path for a validated batch
+(lake → ``sales`` → ``sales_tgt`` → ``sales_summary``); the batch face
+here and the streaming face (``streaming.pipeline``) both call it.
 
 Documented divergences from the reference (SURVEY §7.5.4):
 - quarantine persists the failure reason (reference drops it);
@@ -29,12 +32,13 @@ from dataclasses import dataclass, field
 from typing import Callable
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.dates import format_date
 from .operators.materialize import materialize
 from .operators.agg import sales_summary
+from .operators.dedup import dedup_keep_last
 from .operators.upsert import upsert_keep_last
 from .operators.validate import validate_batch
 from .schema import SALES_DATE_COLUMNS, SALES_KEY_COLUMN
@@ -53,6 +57,11 @@ Notifier = Callable[[str, dict], None]
 
 @dataclass
 class PipelineConfig:
+    """Sink locations and options shared by both faces.  ``notifier``
+    and ``delete_raw`` act on the batch face only (:func:`run_batch`);
+    ``streaming.pipeline.stream_sales_ingest`` neither notifies nor
+    deletes its source files."""
+
     lake_dir: str
     warehouse_dir: str
     quarantine_dir: str
@@ -77,6 +86,91 @@ class PipelineConfig:
 def _notify(cfg: PipelineConfig, status: str, payload: dict) -> None:
     if cfg.notifier is not None:
         cfg.notifier(status, payload)
+
+
+#: Arrival provenance the streaming face carries for its keep-last
+#: ``order_by`` (``streaming.pipeline``); it never lands in a sink.
+PROVENANCE_COLUMNS = ("_source_file", "_source_mtime")
+
+
+def land_valid_batch(
+    spark: SparkSession,
+    valid: DataFrame,
+    cfg: PipelineConfig,
+    batch_id: str,
+    order_by: list[Column] | None = None,
+) -> None:
+    """Land a validated batch (dates cast to DateType) in the
+    reference's sinks, in its order (``lambda.py:160-194``): parquet
+    lake, append-only ``sales`` log, keyed keep-last ``sales_tgt``,
+    per-country ``sales_summary``.  The one landing path of both
+    faces: :func:`run_batch_frame` and the streaming ``process_batch``.
+
+    The lake and the parquet ``sales`` log are batch-id-keyed
+    idempotent appends (SURVEY §7.5.3): a retry or re-drive that
+    reuses ``batch_id`` no-ops there.  The JDBC ``sales`` append stays
+    plain (documented at-least-once: cross-system atomicity is out of
+    scope); ``sales_tgt`` and ``sales_summary`` are keyed overwrites,
+    idempotent by construction.
+
+    ``order_by`` resolves a key repeated within the batch before the
+    upsert: the first row under it wins, the way sequential
+    one-file-per-run processing would resolve it.  The batch face
+    passes none (``validate_batch``'s V4 uniqueness check rejects such
+    a batch); the streaming face passes its arrival order, which may
+    read :data:`PROVENANCE_COLUMNS`.  The lake and the log keep every
+    row (the audit record)."""
+    # The parquet lake keeps native DateType (the reference's parquet
+    # write happens before restringification too, lambda.py:240 vs
+    # 168-169).
+    append_log_idempotent(
+        spark, valid.drop(*PROVENANCE_COLUMNS), cfg.lake_dir, batch_id
+    )
+    serving = valid
+    if cfg.dates_as_strings:
+        for c in SALES_DATE_COLUMNS:
+            serving = serving.withColumn(c, format_date(c))
+    logged = serving.drop(*PROVENANCE_COLUMNS)
+
+    # 1) append-only log (reference S6, lambda.py:172)
+    if cfg.jdbc_url:
+        write_serving_table(
+            logged, cfg.warehouse_dir, "sales", "append",
+            cfg.jdbc_url, cfg.jdbc_properties,
+        )
+    else:
+        append_log_idempotent(
+            spark, logged, f"{cfg.warehouse_dir}/sales", batch_id
+        )
+
+    # 2) keyed keep-last upsert (reference lambda.py:176-181)
+    incoming = logged
+    if order_by is not None:
+        incoming = dedup_keep_last(
+            serving, [SALES_KEY_COLUMN], order_by
+        ).drop(*PROVENANCE_COLUMNS)
+    existing = read_serving_table(
+        spark, cfg.warehouse_dir, "sales_tgt",
+        cfg.jdbc_url, cfg.jdbc_properties,
+    )
+    merged = upsert_keep_last(
+        existing, incoming, [SALES_KEY_COLUMN], broadcast_keys=True
+    )
+    # Materialize before overwrite: the plan reads the same files the
+    # overwrite truncates, so the lineage must be cut (a real
+    # deployment uses Delta MERGE and avoids the rewrite entirely).
+    merged = materialize(merged)
+    write_serving_table(
+        merged, cfg.warehouse_dir, "sales_tgt", "overwrite",
+        cfg.jdbc_url, cfg.jdbc_properties,
+    )
+
+    # 3) per-country summary (reference lambda.py:184-190)
+    summary_src = incoming if cfg.summary_scope == "batch" else merged
+    write_serving_table(
+        sales_summary(summary_src), cfg.warehouse_dir, "sales_summary",
+        "overwrite", cfg.jdbc_url, cfg.jdbc_properties,
+    )
 
 
 def run_batch(
@@ -140,62 +234,11 @@ def run_batch_frame(
         # re-executed the full input parse + validation plan.
         valid = materialize(valid)
         metrics = {k: v for k, v in obs.get.items()}
-        # Parquet lake keeps native DateType (the reference's parquet
-        # write happens before restringification too, lambda.py:240 vs
-        # 168-169).  Batch-id-KEYED idempotent append (SURVEY §7.5.3):
-        # a re-drive or retry that reuses its batch_id no-ops instead
-        # of double-appending.  run_batch's default mints a fresh
-        # timestamp id per call — the reference's ts-folder behavior —
-        # so lake/sales exactly-once needs the caller to pass a stable
-        # id; reprocess_quarantine derives one from the quarantine
-        # content for exactly this reason.
-        append_log_idempotent(spark, valid, cfg.lake_dir, batch_id)
-
-        serving = valid
-        if cfg.dates_as_strings:
-            for c in SALES_DATE_COLUMNS:
-                serving = serving.withColumn(c, format_date(c))
-
-        # 1) append-only log (reference S6, lambda.py:172): idempotent
-        # on the parquet path; JDBC keeps the plain append (documented
-        # at-least-once — cross-system atomicity is out of scope)
-        if cfg.jdbc_url:
-            write_serving_table(
-                serving, cfg.warehouse_dir, "sales", "append",
-                cfg.jdbc_url, cfg.jdbc_properties,
-            )
-        else:
-            append_log_idempotent(
-                spark, serving, f"{cfg.warehouse_dir}/sales", batch_id
-            )
-
-        # 2) keyed keep-last upsert (reference lambda.py:176-181)
-        existing = read_serving_table(
-            spark, cfg.warehouse_dir, "sales_tgt",
-            cfg.jdbc_url, cfg.jdbc_properties,
-        )
-        merged = upsert_keep_last(
-            existing, serving, [SALES_KEY_COLUMN], broadcast_keys=True
-        )
-        # Materialize before overwrite: the plan reads the same files the
-        # overwrite truncates, so the lineage must be cut (a real
-        # deployment uses Delta MERGE and avoids the rewrite entirely).
-        merged = materialize(merged)
-        write_serving_table(
-            merged, cfg.warehouse_dir, "sales_tgt", "overwrite",
-            cfg.jdbc_url, cfg.jdbc_properties,
-        )
-
-        # 3) per-country summary (reference lambda.py:184-190)
-        summary_src = serving if cfg.summary_scope == "batch" else merged
-        write_serving_table(
-            sales_summary(summary_src),
-            cfg.warehouse_dir,
-            "sales_summary",
-            "overwrite",
-            cfg.jdbc_url,
-            cfg.jdbc_properties,
-        )
+        # run_batch mints a fresh timestamp id per call (the reference's
+        # ts-folder behavior), so lake/sales exactly-once needs a caller
+        # that passes a stable id: reprocess_quarantine derives one from
+        # the quarantined content.
+        land_valid_batch(spark, valid, cfg, batch_id)
 
         if cfg.delete_raw:
             delete_path(spark, input_path)

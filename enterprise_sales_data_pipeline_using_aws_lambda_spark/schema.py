@@ -76,14 +76,3 @@ def sales_ingest_schema() -> T.StructType:
             T.StructField("TotalProfit", T.DoubleType()),
         ]
     )
-
-
-def sales_validated_schema() -> T.StructType:
-    """Post-validation schema: date columns cast to ``DateType``."""
-    fields = []
-    for f in sales_ingest_schema().fields:
-        if f.name in SALES_DATE_COLUMNS:
-            fields.append(T.StructField(f.name, T.DateType()))
-        else:
-            fields.append(f)
-    return T.StructType(fields)

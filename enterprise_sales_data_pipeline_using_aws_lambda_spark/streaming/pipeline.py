@@ -3,20 +3,23 @@
 The reference's "streaming" is one S3 ``ObjectCreated`` event per file
 under ``raw/`` triggering one Lambda invocation (reference
 ``lambda.py:207-209``, ``README.md:79-89``).  Spark equivalent: a file
-source watching ``raw/`` + ``foreachBatch`` running the same
-validate → lake → upsert → summary dataflow per micro-batch — fixing
-the reference's at-least-once double-append risk (SURVEY §2.8).
+source watching ``raw/`` + ``foreachBatch``.  Each micro-batch is
+validated row by row here (invalid rows go to the quarantine with their
+reason); the valid rows land through ``pipeline.land_valid_batch``, the
+one landing path the batch face uses too (lake → ``sales`` →
+``sales_tgt`` → ``sales_summary``).
 
-Sink-level replay safety: foreachBatch is AT-LEAST-ONCE (a batch can
-re-run after its writes land but before the checkpoint commits), so
-checkpointing alone does not make appends exactly-once.  Every append
-sink here is therefore batch-id-keyed through
-``writers.append_log_idempotent`` (staging + atomic rename into an
-``ingest_batch=<epoch>`` partition; replays skip committed partitions),
-and the keyed-overwrite sinks (``sales_tgt`` upsert, summary) are
-idempotent by construction.  The JDBC path keeps plain appends —
-cross-system atomicity needs transactional staging tables out of scope
-here — and is documented at-least-once.
+Replay safety fixes the reference's at-least-once double-append risk
+(SURVEY §2.8): foreachBatch can re-run a batch after its writes land
+but before the checkpoint commits, so every append sink (lake, parquet
+``sales`` log, quarantine) is keyed on the micro-batch id through
+``writers.append_log_idempotent`` and a replay skips committed
+partitions; the ``sales_tgt`` upsert and the summary are keyed
+overwrites.  The JDBC ``sales`` append stays plain and is documented
+at-least-once.
+
+``PipelineConfig.notifier`` and ``delete_raw`` act on the batch face
+only: the stream neither notifies nor deletes its source files.
 
 Divergence (documented, SURVEY §7.5.4): a micro-batch may contain many
 files; the reference silently drops all but the first event record.
@@ -27,22 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dates import format_date
-from ..operators.materialize import materialize
-from ..operators.agg import sales_summary
-from ..operators.dedup import dedup_keep_last
-from ..operators.upsert import upsert_keep_last
-from ..operators.validate import (
-    row_rules_sales,
-    validate_rows,
+from ..operators.validate import cast_dates, row_rules_sales, validate_rows
+from ..pipeline import (
+    PROVENANCE_COLUMNS,
+    PipelineConfig,
+    land_valid_batch,
 )
-from ..pipeline import PipelineConfig
-from ..schema import SALES_DATE_COLUMNS, SALES_DATE_FORMAT, SALES_KEY_COLUMN
-from ..sources.writers import (
-    append_log_idempotent,
-    read_serving_table,
-    write_serving_table,
-)
+from ..sources.writers import append_log_idempotent
 
 
 def stream_sales_ingest(
@@ -115,85 +109,26 @@ def stream_sales_ingest(
                     str(batch_id),
                 )
 
-            casted = valid
-            for c in SALES_DATE_COLUMNS:
-                casted = casted.withColumn(
-                    c, F.to_date(F.col(c).cast("string"), SALES_DATE_FORMAT)
-                )
-            append_log_idempotent(
-                spark, casted.drop("_source_file", "_source_mtime"),
-                cfg.lake_dir, str(batch_id),
-            )
-
-            serving = casted
-            if cfg.dates_as_strings:
-                for c in SALES_DATE_COLUMNS:
-                    serving = serving.withColumn(c, format_date(c))
-            if cfg.jdbc_url:
-                # JDBC append: at-least-once (module docstring)
-                write_serving_table(
-                    serving.drop("_source_file", "_source_mtime"),
-                    cfg.warehouse_dir,
-                    "sales", "append", cfg.jdbc_url, cfg.jdbc_properties,
-                )
-            else:
-                append_log_idempotent(
-                    spark, serving.drop("_source_file", "_source_mtime"),
-                    f"{cfg.warehouse_dir}/sales", str(batch_id),
-                )
-            # Intra-batch keyed keep-last BEFORE the upsert: a
-            # micro-batch drains up to 16 files, and the same key
-            # arriving in two of them must resolve the way the
-            # reference's sequential one-event-one-run loop would —
-            # the later-ARRIVING file's row wins.  Arrival order is the
-            # file's modification time (``_source_mtime`` DESC, from
-            # the scan's _metadata column — no extra I/O); the path
-            # string, the previous proxy, only matches arrival order
-            # when feed filenames happen to sort chronologically, so it
-            # is demoted to the same-mtime tiebreak, and a content hash
-            # breaks same-file ties deterministically.
-            # The batch path gets this for free from validate_batch's
-            # whole-file V4 uniqueness check; the row-level rules here
-            # have no duplicate-key rule, so without this dedup BOTH
-            # copies survive upsert_keep_last's anti-join+union and
-            # the keyed sales_tgt table double-counts the key.  The
-            # lake and append-only ``sales`` log above keep every row
-            # (the audit record, exactly what sequential reference
-            # runs would have appended).
+            # Intra-batch keyed keep-last: a micro-batch drains up to
+            # 16 files, and a key arriving in two of them must resolve
+            # as the reference's sequential one-event-one-run loop
+            # would: the later-ARRIVING file's row wins (mtime, then
+            # path for same-mtime files, then a content hash for
+            # same-file ties).  The batch face gets this from
+            # validate_batch's whole-file V4 uniqueness check; the
+            # row-level rules here have none.
             data_cols = [
-                c for c in serving.columns
-                if c not in ("_source_file", "_source_mtime")
+                c for c in valid.columns if c not in PROVENANCE_COLUMNS
             ]
-            incoming = dedup_keep_last(
-                serving, [SALES_KEY_COLUMN],
-                [
+            land_valid_batch(
+                spark, cast_dates(valid), cfg, str(batch_id),
+                order_by=[
                     F.col("_source_mtime").desc(),
                     F.col("_source_file").desc(),
                     F.xxhash64(
                         *[F.col(c).cast("string") for c in data_cols]
                     ).desc(),
                 ],
-            ).drop("_source_file", "_source_mtime")
-            existing = read_serving_table(
-                spark, cfg.warehouse_dir, "sales_tgt",
-                cfg.jdbc_url, cfg.jdbc_properties,
-            )
-            merged = upsert_keep_last(
-                existing, incoming, [SALES_KEY_COLUMN],
-                broadcast_keys=True,
-            )
-            merged = materialize(merged)
-            write_serving_table(
-                merged, cfg.warehouse_dir, "sales_tgt", "overwrite",
-                cfg.jdbc_url, cfg.jdbc_properties,
-            )
-            summary_src = (
-                incoming if cfg.summary_scope == "batch" else merged
-            )
-            write_serving_table(
-                sales_summary(summary_src), cfg.warehouse_dir,
-                "sales_summary", "overwrite",
-                cfg.jdbc_url, cfg.jdbc_properties,
             )
         finally:
             batch_df.unpersist()

@@ -57,7 +57,7 @@ def test_jdbc_missing_table_fallback(spark, derby_url):
     )
 
 
-def test_pipeline_e2e_on_jdbc_serving(spark, tmp_path):
+def test_pipeline_e2e_on_jdbc_serving(spark, tmp_path, sales_sample):
     """Full reference pipeline with the serving tables on a real JDBC
     database: ingest CSV -> validate -> lake -> sales/sales_tgt/
     sales_summary via df.write.jdbc; replay is idempotent on the keyed
@@ -75,7 +75,7 @@ def test_pipeline_e2e_on_jdbc_serving(spark, tmp_path):
         jdbc_url=url,
         jdbc_properties=DERBY_PROPS,
     )
-    sample = "/root/reference/sample_data/sales_data_500.csv"
+    sample = sales_sample.csv
     r1 = run_batch(spark, sample, cfg)
     assert r1["status"] == "success"
     tgt = read_serving_table(spark, "", "sales_tgt", url, DERBY_PROPS)
@@ -92,7 +92,7 @@ def test_pipeline_e2e_on_jdbc_serving(spark, tmp_path):
     assert read_serving_table(spark, "", "sales", url, DERBY_PROPS).count() == 1000
 
 
-def test_streaming_ingest_to_jdbc_serving(spark, tmp_path):
+def test_streaming_ingest_to_jdbc_serving(spark, tmp_path, sales_sample):
     """The reference's actual architecture — file-event stream feeding
     relational serving tables — end to end: streaming ingest with
     foreachBatch writing sales/sales_tgt/sales_summary over JDBC."""
@@ -107,10 +107,7 @@ def test_streaming_ingest_to_jdbc_serving(spark, tmp_path):
 
     raw = tmp_path / "raw"
     raw.mkdir()
-    shutil.copy(
-        "/root/reference/sample_data/sales_data_500.csv",
-        raw / "batch1.csv",
-    )
+    shutil.copy(sales_sample.csv, raw / "batch1.csv")
     url = f"jdbc:derby:memory:stream{uuid.uuid4().hex};create=true"
     cfg = PipelineConfig(
         lake_dir=str(tmp_path / "lake"),

@@ -12,14 +12,6 @@ from enterprise_sales_data_pipeline_using_aws_lambda_spark.pipeline import (
     run_batch,
 )
 
-SAMPLE_CSV = "/root/reference/sample_data/sales_data_500.csv"
-SAMPLE_JSON = "/root/reference/sample_data/sales_data.json"
-
-needs_sample = pytest.mark.skipif(
-    not os.path.exists(SAMPLE_CSV), reason="reference sample data not present"
-)
-
-
 @pytest.fixture()
 def cfg(tmp_path):
     notices = []
@@ -33,9 +25,8 @@ def cfg(tmp_path):
     return c
 
 
-@needs_sample
-def test_csv_happy_path(spark, cfg):
-    r = run_batch(spark, SAMPLE_CSV, cfg)
+def test_csv_happy_path(spark, cfg, sales_sample):
+    r = run_batch(spark, sales_sample.csv, cfg)
     assert r["status"] == "success"
     tgt = spark.read.parquet(f"{cfg.warehouse_dir}/sales_tgt")
     assert tgt.count() == 500
@@ -57,10 +48,9 @@ def test_csv_happy_path(spark, cfg):
     assert "ingest_batch" in lake.columns
 
 
-@needs_sample
-def test_replay_is_idempotent_for_target(spark, cfg):
-    run_batch(spark, SAMPLE_CSV, cfg)
-    run_batch(spark, SAMPLE_CSV, cfg)
+def test_replay_is_idempotent_for_target(spark, cfg, sales_sample):
+    run_batch(spark, sales_sample.csv, cfg)
+    run_batch(spark, sales_sample.csv, cfg)
     tgt = spark.read.parquet(f"{cfg.warehouse_dir}/sales_tgt")
     assert tgt.count() == 500
     assert tgt.select("uuid").distinct().count() == 500
@@ -69,12 +59,11 @@ def test_replay_is_idempotent_for_target(spark, cfg):
     assert log.count() == 1000
 
 
-@needs_sample
-def test_json_format_equivalence(spark, cfg, tmp_path):
+def test_json_format_equivalence(spark, cfg, tmp_path, sales_sample):
     """CSV and NDJSON readers produce identical engine output for
     identical content (the reference fixtures themselves have disjoint
     uuids, so build a JSON twin from the CSV)."""
-    df = pd.read_csv(SAMPLE_CSV)
+    df = pd.read_csv(sales_sample.csv)
     twin = str(tmp_path / "twin.json")
     df.to_json(twin, orient="records", lines=True)
     r = run_batch(spark, twin, cfg)
@@ -82,16 +71,17 @@ def test_json_format_equivalence(spark, cfg, tmp_path):
     tgt = spark.read.parquet(f"{cfg.warehouse_dir}/sales_tgt")
     assert tgt.count() == 500
 
-    r2 = run_batch(spark, SAMPLE_CSV, cfg)
+    r2 = run_batch(spark, sales_sample.csv, cfg)
     assert r2["status"] == "success"
     tgt2 = spark.read.parquet(f"{cfg.warehouse_dir}/sales_tgt")
     # same keys, same values → upsert leaves the table at 500
     assert tgt2.count() == 500
 
 
-@needs_sample
-def test_validation_failure_quarantines_with_reason(spark, cfg, tmp_path):
-    df = pd.read_csv(SAMPLE_CSV)
+def test_validation_failure_quarantines_with_reason(
+    spark, cfg, tmp_path, sales_sample
+):
+    df = pd.read_csv(sales_sample.csv)
     df.loc[1, "uuid"] = df.loc[0, "uuid"]
     bad = str(tmp_path / "bad.csv")
     df.to_csv(bad, index=False)
@@ -114,8 +104,9 @@ def test_unsupported_extension_fails_cleanly(spark, cfg):
     assert "Unsupported file format" in r["error"]
 
 
-@needs_sample
-def test_batch_scope_summary_matches_reference_quirk(spark, tmp_path):
+def test_batch_scope_summary_matches_reference_quirk(
+    spark, tmp_path, sales_sample
+):
     """summary_scope='batch' reproduces lambda.py:184's current-batch-only
     aggregate; cumulative is the default (SURVEY §1.4)."""
     cfg = PipelineConfig(
@@ -124,13 +115,12 @@ def test_batch_scope_summary_matches_reference_quirk(spark, tmp_path):
         quarantine_dir=str(tmp_path / "q"),
         summary_scope="batch",
     )
-    run_batch(spark, SAMPLE_CSV, cfg)
+    run_batch(spark, sales_sample.csv, cfg)
     s1 = spark.read.parquet(f"{cfg.warehouse_dir}/sales_summary")
     assert s1.count() == 10
 
 
-@needs_sample
-def test_json_record_array_form(spark, tmp_path):
+def test_json_record_array_form(spark, tmp_path, sales_sample):
     """Reference S3 quirk (lambda.py:66-71): a single top-level JSON
     array of records must parse like its NDJSON twin — the reader probes
     the first byte and flips to multiLine mode."""
@@ -138,7 +128,7 @@ def test_json_record_array_form(spark, tmp_path):
 
     import pandas as pd
 
-    rows = pd.read_csv(SAMPLE_CSV).head(25).to_dict(orient="records")
+    rows = pd.read_csv(sales_sample.csv).head(25).to_dict(orient="records")
     arr = tmp_path / "batch_array.json"
     arr.write_text(_json.dumps(rows))
     cfg = PipelineConfig(
@@ -157,8 +147,7 @@ def test_json_record_array_form(spark, tmp_path):
     assert lake.schema["OrderDate"].dataType.typeName() == "date"
 
 
-@needs_sample
-def test_observed_ingest_metrics(spark, tmp_path):
+def test_observed_ingest_metrics(spark, tmp_path, sales_sample):
     """run_batch returns observe()-collected metrics (row count, revenue,
     distinct keys) measured on the lake-write job itself — no extra pass."""
     cfg = PipelineConfig(
@@ -166,7 +155,7 @@ def test_observed_ingest_metrics(spark, tmp_path):
         warehouse_dir=str(tmp_path / "wh"),
         quarantine_dir=str(tmp_path / "q"),
     )
-    r = run_batch(spark, SAMPLE_CSV, cfg)
+    r = run_batch(spark, sales_sample.csv, cfg)
     assert r["status"] == "success"
     m = r["metrics"]
     assert m["rows"] == 500
@@ -174,25 +163,26 @@ def test_observed_ingest_metrics(spark, tmp_path):
     assert m["revenue"] > 0
 
 
-@needs_sample
-def test_header_only_csv(spark, cfg, tmp_path):
+def test_header_only_csv(spark, cfg, tmp_path, sales_sample):
     """Empty batch (header, zero rows): validation passes vacuously
     (no dup keys, no bad dates) and the pipeline completes without
     corrupting serving tables — zero-row batches happen constantly in
     real file streams and must be no-ops, not failures."""
     import pandas as pd
 
-    pd.read_csv(SAMPLE_CSV).head(0).to_csv(tmp_path / "empty.csv", index=False)
+    pd.read_csv(sales_sample.csv).head(0).to_csv(
+        tmp_path / "empty.csv", index=False
+    )
     r = run_batch(spark, str(tmp_path / "empty.csv"), cfg)
     assert r["status"] == "success"
     assert r["metrics"]["rows"] == 0
     # A real batch afterwards works and sees only its own rows.
-    r2 = run_batch(spark, SAMPLE_CSV, cfg)
+    r2 = run_batch(spark, sales_sample.csv, cfg)
     assert r2["status"] == "success"
     assert spark.read.parquet(f"{cfg.warehouse_dir}/sales_tgt").count() == 500
 
 
-def test_reprocess_quarantine_redrive(spark, cfg, tmp_path):
+def test_reprocess_quarantine_redrive(spark, cfg, tmp_path, sales_sample):
     """The recovery path: a quarantined batch, fixed upstream, re-drives
     through the SAME gate into the serving tables; still-bad batches
     re-quarantine under a new reason; empty re-drives are no-ops."""
@@ -203,7 +193,7 @@ def test_reprocess_quarantine_redrive(spark, cfg, tmp_path):
     # noop on an empty store
     (tmp_path / "quarantine").mkdir(exist_ok=True)
     # quarantine a batch via a duplicate-uuid failure
-    df = pd.read_csv(SAMPLE_CSV)
+    df = pd.read_csv(sales_sample.csv)
     df.loc[1, "uuid"] = df.loc[0, "uuid"]
     bad = str(tmp_path / "bad.csv")
     df.to_csv(bad, index=False)
@@ -225,7 +215,7 @@ def test_reprocess_quarantine_redrive(spark, cfg, tmp_path):
     import shutil
 
     shutil.rmtree(cfg.quarantine_dir)
-    fixed = pd.read_csv(SAMPLE_CSV)  # original, no dup
+    fixed = pd.read_csv(sales_sample.csv)  # original, no dup
     good_csv = str(tmp_path / "fixed.csv")
     fixed.to_csv(good_csv, index=False)
     rq = run_batch(
@@ -294,7 +284,9 @@ def test_reprocess_quarantine_empty_store_is_noop(spark, cfg, tmp_path):
     assert r2["status"] == "noop" and r2["n_requeued"] == 0
 
 
-def test_reprocess_all_collapses_redrive_copies(spark, cfg, tmp_path):
+def test_reprocess_all_collapses_redrive_copies(
+    spark, cfg, tmp_path, sales_sample
+):
     """A failed re-drive re-quarantines byte-identical copies; the next
     re-drive-all must collapse them so a later fix can still pass
     duplicate-key validation (no permanent poisoning)."""
@@ -302,7 +294,7 @@ def test_reprocess_all_collapses_redrive_copies(spark, cfg, tmp_path):
         reprocess_quarantine,
     )
 
-    df = pd.read_csv(SAMPLE_CSV)
+    df = pd.read_csv(sales_sample.csv)
     df.loc[1, "uuid"] = df.loc[0, "uuid"]
     bad = str(tmp_path / "bad.csv")
     df.to_csv(bad, index=False)
@@ -315,9 +307,8 @@ def test_reprocess_all_collapses_redrive_copies(spark, cfg, tmp_path):
     assert r2["status"] == "failed" and r2["n_requeued"] == 500
 
 
-@needs_sample
 def test_reprocess_quarantine_crash_mid_redrive_converges(
-    spark, cfg, tmp_path, monkeypatch
+    spark, cfg, tmp_path, monkeypatch, sales_sample
 ):
     """Replay safety of the recovery job ITSELF: a re-drive that dies
     between sink writes (here: after the lake write and the append log,
@@ -336,8 +327,8 @@ def test_reprocess_quarantine_crash_mid_redrive_converges(
 
     # fixed rows sitting in quarantine after an upstream fix
     write_quarantine(
-        read_sales(spark, SAMPLE_CSV), cfg.quarantine_dir,
-        "historic failure", SAMPLE_CSV, "b_fix",
+        read_sales(spark, sales_sample.csv), cfg.quarantine_dir,
+        "historic failure", sales_sample.csv, "b_fix",
     )
 
     # crash injection: the 1st serving write of the re-drive is the
@@ -740,3 +731,54 @@ def test_reprocess_heterogeneous_schema_store(spark, cfg):
     archived = sorted(os.listdir(f"{qdir}/_requeued"))
     assert archived == ["ingest_batch=b1", "ingest_batch=b2"]
     assert pl.reprocess_quarantine(spark, cfg)["status"] == "noop"
+
+
+@pytest.mark.parametrize("scope", ["cumulative", "batch"])
+def test_batch_and_streaming_faces_land_the_same_rows(
+    spark, tmp_path, sales_sample, scope
+):
+    """Both faces land a valid batch through one path: the same CSV fed
+    to run_batch and to stream_sales_ingest (separate directories)
+    yields the same lake, sales, sales_tgt and sales_summary rows.
+    Only the ingest_batch partition value differs (a timestamp id vs
+    the micro-batch id)."""
+    import shutil
+
+    from enterprise_sales_data_pipeline_using_aws_lambda_spark.streaming.pipeline import (  # noqa: E501
+        stream_sales_ingest,
+    )
+
+    def face_cfg(face):
+        return PipelineConfig(
+            lake_dir=str(tmp_path / face / "lake"),
+            warehouse_dir=str(tmp_path / face / "wh"),
+            quarantine_dir=str(tmp_path / face / "quarantine"),
+            summary_scope=scope,
+        )
+
+    batch, stream = face_cfg("batch"), face_cfg("stream")
+    assert run_batch(spark, sales_sample.csv, batch)["status"] == "success"
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    shutil.copy(sales_sample.csv, raw / "batch1.csv")
+    stream_sales_ingest(
+        spark, str(raw), stream, str(tmp_path / "ckpt"), available_now=True
+    ).awaitTermination(120)
+
+    def rows(path):
+        df = spark.read.parquet(path).drop("ingest_batch")
+        return df.columns, sorted(map(tuple, df.collect()), key=repr)
+
+    for table in ("lake", "wh/sales", "wh/sales_tgt"):
+        b, s = rows(f"{tmp_path}/batch/{table}"), rows(
+            f"{tmp_path}/stream/{table}"
+        )
+        assert b[0] == s[0], table
+        assert len(b[1]) == 500 and b[1] == s[1], table
+    b_cols, b_sum = rows(f"{tmp_path}/batch/wh/sales_summary")
+    s_cols, s_sum = rows(f"{tmp_path}/stream/wh/sales_summary")
+    assert b_cols == s_cols and len(b_sum) == 10
+    # the averages may differ in the last bits with the summation order
+    assert [r[0] for r in b_sum] == [r[0] for r in s_sum]
+    for br, sr in zip(b_sum, s_sum):
+        assert br == pytest.approx(sr, rel=1e-12)

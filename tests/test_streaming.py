@@ -24,19 +24,13 @@ from enterprise_sales_data_pipeline_using_aws_lambda_spark.streaming.windows imp
     tumbling_counts,
 )
 
-SAMPLE_CSV = "/root/reference/sample_data/sales_data_500.csv"
 SF_DIR = "/root/testdata/sf0.001"
 
-needs_sample = pytest.mark.skipif(
-    not os.path.exists(SAMPLE_CSV), reason="reference sample data not present"
-)
 
-
-@needs_sample
-def test_stream_ingest_available_now(spark, tmp_path):
+def test_stream_ingest_available_now(spark, tmp_path, sales_sample):
     raw = tmp_path / "raw"
     raw.mkdir()
-    shutil.copy(SAMPLE_CSV, raw / "batch1.csv")
+    shutil.copy(sales_sample.csv, raw / "batch1.csv")
     cfg = PipelineConfig(
         lake_dir=str(tmp_path / "lake"),
         warehouse_dir=str(tmp_path / "wh"),
@@ -62,7 +56,7 @@ def test_stream_ingest_available_now(spark, tmp_path):
     assert log.count() == 500  # no double-append on replay
 
     # New file with overlapping keys: upsert keeps the table keyed.
-    df = pd.read_csv(SAMPLE_CSV).head(50)
+    df = pd.read_csv(sales_sample.csv).head(50)
     df["UnitsSold"] = df["UnitsSold"] + 1
     df.to_csv(raw / "batch2.csv", index=False)
     q3 = stream_sales_ingest(
@@ -74,11 +68,10 @@ def test_stream_ingest_available_now(spark, tmp_path):
     assert tgt3.select("uuid").distinct().count() == 500
 
 
-@needs_sample
-def test_stream_ingest_row_level_quarantine(spark, tmp_path):
+def test_stream_ingest_row_level_quarantine(spark, tmp_path, sales_sample):
     raw = tmp_path / "raw"
     raw.mkdir()
-    df = pd.read_csv(SAMPLE_CSV).head(20)
+    df = pd.read_csv(sales_sample.csv).head(20)
     df.loc[3, "OrderDate"] = "2016-13-45"  # unparseable date
     df.to_csv(raw / "dirty.csv", index=False)
     cfg = PipelineConfig(
@@ -870,7 +863,7 @@ def test_sales_feed_fulllist_restart_shrunk_offset_no_reingest(
     }
 
 
-def test_stream_ingest_checkpoint_reset_no_double_append(spark, tmp_path):
+def test_stream_ingest_checkpoint_reset_no_double_append(spark, tmp_path, sales_sample):
     """foreachBatch is at-least-once: with the checkpoint DELETED, the
     whole stream re-runs from scratch with the same restarting batch
     ids — the batch-id-keyed sinks must skip the already-committed
@@ -880,7 +873,7 @@ def test_stream_ingest_checkpoint_reset_no_double_append(spark, tmp_path):
 
     raw = tmp_path / "raw"
     raw.mkdir()
-    _sh.copy(SAMPLE_CSV, raw / "batch1.csv")
+    _sh.copy(sales_sample.csv, raw / "batch1.csv")
     cfg = PipelineConfig(
         lake_dir=str(tmp_path / "lake"),
         warehouse_dir=str(tmp_path / "wh"),
