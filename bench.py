@@ -9,14 +9,19 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 Each query is forced through the noop sink — full computation, no
 driver-side collect bottleneck — after a warm-up of the session JVM.
+Every lane follows one timing rule (``time_lane``): one untimed warm-up
+run, then ``TIMED_RUNS`` timed runs; ``queries`` reports the minimum
+and ``spread`` max−min of the timed runs.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import socket
 import sys
 import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,7 +52,6 @@ def _default_runner() -> str:
     the builder/judge export SPARK_GRAFT_BENCH_RUNNER) — user@host:pid
     from public stdlib APIs, so every archive names SOME actor."""
     import getpass
-    import socket
 
     try:
         user = getpass.getuser()
@@ -64,54 +68,30 @@ def _utc_now_iso() -> str:
     )
 
 
-def promotion_candidates(
-    prev: dict, registered, already_min_of_5, this_host: str
-) -> tuple[list[str], dict]:
-    """Which lanes the previous run's archive promotes to min-of-5,
-    plus a provenance/skip note for the output JSON (module-level so
-    tests can drive it without a SparkSession — see main() for the
-    rationale comments).  Warm-run spread only, same-host archives
-    only, ≥2 warm runs required, capped at 5.  Lanes the archive
-    marks 'failed' are skipped (round-12 ADVICE: runs_s used to be
-    registered before the lane ran, so a mid-sequence failure
-    archived partial runs that the next round could consume as
-    promotion evidence) — main() also quarantines those runs under
-    'failed_runs_s', so this guard covers archives written by older
-    code."""
-    host = prev.get("host")
-    runs_s = prev.get("runs_s")
-    prev_failed = prev.get("failed") or {}
-    if host != this_host:
-        return [], {
-            "skipped": (
-                f"archive host {host!r} is not this host — another "
-                f"machine's noise must not drive promotion"
-            )
-        }
-    if not isinstance(runs_s, dict):
-        return [], {
-            "skipped": "archive has no per-lane run lists "
-                       "(pre-round-12 format)"
-        }
-    cands = []
-    for n, rs in runs_s.items():
-        if n not in registered or n in already_min_of_5:
-            continue
-        if n in prev_failed:
-            continue  # partial samples from a failed lane: not evidence
-        warm = rs[1:]
-        if len(warm) < 2:
-            continue
-        wmin, wspread = min(warm), max(warm) - min(warm)
-        if wmin > 0 and wspread > wmin and wspread > 0.5:
-            cands.append((wspread / wmin, n))
-    cands.sort(reverse=True)
-    return [n for _, n in cands[:5]], {
-        "git_head": prev.get("git_head"),
-        "timestamp": prev.get("timestamp"),
-        "host": host,
-        "runner": prev.get("runner"),
-    }
+#: Timed runs per lane, after one untimed warm-up run that pays plan
+#: compilation and codegen JIT (~5-10 s on the MinHash lanes).  The
+#: minimum is the steady-state cost a recurring production job sees;
+#: max−min over the timed runs is the lane's measured noise.
+TIMED_RUNS = 3
+
+
+def time_lane(run: Callable[[], float]) -> tuple[float, float, int]:
+    """(min, spread, timed runs) of one lane.  ``run`` executes the
+    lane once and returns its measured seconds.
+
+    A warm-up failure propagates, so the caller lists the lane as
+    failed; so does a failure of the first timed run, which leaves no
+    sample.  A failure on a LATER timed run keeps the samples already
+    taken (fewer than ``TIMED_RUNS`` in the run count shows it)."""
+    run()
+    runs = [run()]
+    try:
+        for _ in range(TIMED_RUNS - 1):
+            runs.append(run())
+    except Exception:  # noqa: BLE001 - keep the good sample(s)
+        pass
+    return round(min(runs), 3), round(max(runs) - min(runs), 3), len(runs)
+
 
 #: The queries that define this engine's headline cost profile: the
 #: reference surface (summary, dedup, upsert, validation), the TPC-H-ish
@@ -262,10 +242,6 @@ def main() -> None:
     region.count()
     region.mapInPandas(lambda it: it, region.schema).count()
 
-    # Min of repeated timed runs per query: the first run pays plan
-    # compilation + codegen JIT; the min is the steady-state cost a
-    # recurring production job sees.  (Total wall below is the sum of
-    # the per-query minima; see _time for the >2s min-of-3 rule.)
     def _minhash_engine_only(spark_, sf_dir_):
         # The dedup_minhash_lsh GATE folds an exact-Jaccard verify stage
         # (its oracle upgrade); benching the engine path separately
@@ -367,112 +343,8 @@ def main() -> None:
         release_checkpoints,
     )
 
-    # The lanes whose run-to-run spread repeatedly dominated the
-    # total-wall noise (round-8 adjudication: pagerank spread 2.6 s on
-    # a 6.9 s min, minhash 1.6 s; the round-9 solo runs then showed
-    # the same pathology next on mad_robust_spread / percentile_summary
-    # / triangle_count_parts — 1.2-1.4 s spreads on ~2 s mins, run-1
-    # JIT plus GC debt) get FIVE runs: the first is excluded
-    # as codegen/JIT warm-up, and the reported spread is max−min over
-    # the three FASTEST of the four warm runs — these lanes' noise is
-    # heavy-tailed (one GC-hit warm run out of four is common and
-    # measured 1.5 s on a 7.2 s min), so an untrimmed max−min keeps
-    # reading ~20% of min no matter how many samples are taken.  The
-    # trimmed spread is the noise floor a regression claim must clear;
-    # the min is unaffected by the trim (VERDICT r08 item 4).  Each of
-    # these lanes' runs is also preceded by an explicit full GC OUTSIDE
-    # the clock: measured standalone, pagerank reads 7.95-9.43 s across
-    # warm runs without it and 7.48-8.00 s with it — the un-GC'd
-    # number includes a variable tax for collecting EARLIER lanes'
-    # garbage, which is exactly the cross-lane contamination a
-    # per-lane number should exclude (the same isolation
-    # scale_smoke.py's section_break applies between sections).
-    # Round-10 additions (VERDICT r09 item 4): peak_concurrent_sessions
-    # (12.7 s spread on a 2.8 s min in the round-9 judge run) and
-    # dedup_repeated_spans (15.8 s on 3.1 s; README documents
-    # 13.9/38.1/28.5 s cold swings) were the two remaining
-    # single-shot noise-dominated lanes.  Round-11 additions (VERDICT
-    # r10 item 4): winsorized_stats (6.9 s spread in the judge's solo
-    # run, 0.95 s on a 2.2 s min driver-side),
-    # conversion_latency_percentiles (9.6 s judge-side) and
-    # audio_energy_fingerprints (2.86 s spread on a 1.7 s min in the
-    # driver run) — the next three cold-lane-lottery candidates.
-    # Round-13 addition (VERDICT r12 item 3): basket_part_pairs_lift
-    # read 4.4-5.1 s on all three round-12 driver runs and 3.48 s min
-    # on the judge's solo run vs 1.74-1.80 s same-day afternoon
-    # anchors on byte-identical plan digests — the same
-    # evening-box/JIT-convergence class pinned for mad_robust_spread
-    # (a min-of-3 join-heavy plan with many codegen modules).  The
-    # min-of-5 treatment (pre-run GC + drop run 1 + trimmed spread)
-    # is the adjudication that settled mad/minhash; its steady-state
-    # min, not its totals-window samples, is the graded quantity.
-    MIN_OF_5 = {
-        "pagerank_part_graph", "dedup_minhash_lsh",
-        "mad_robust_spread", "percentile_summary",
-        "triangle_count_parts", "peak_concurrent_sessions",
-        "dedup_repeated_spans", "winsorized_stats",
-        "conversion_latency_percentiles", "audio_energy_fingerprints",
-        "basket_part_pairs_lift",
-    }
-
-    # Auto-promotion (VERDICT r10 item 4): the hand-list above grew
-    # one verdict at a time — one noisy lane cured per round while the
-    # next one waited.  Generalize it into a RULE with the hand-list
-    # as the floor.  Round-12 hardening (VERDICT r11 item 3 + ADVICE):
-    # the rule now reads WARM-run spread only — the old whole-spread
-    # test mostly measured run-1 cold-start (e.g. ref_upsert's 1.374 s
-    # "spread" was cold−warm on a 1.195 s min), which min-of-5 drops
-    # anyway, so those promotions burned slots without reducing noise.
-    # A lane promotes only when it has ≥2 WARM runs (the >2 s
-    # min-of-3 club and existing min-of-5 lanes do; min-of-2 lanes
-    # have one warm run and carry no warm-noise evidence) whose
-    # max−min exceeds both the warm min (noise bigger than signal)
-    # and 0.5 s absolute.  The archive is also PROVENANCE-GUARDED:
-    # BENCH_LAST.json is stamped with git_head/timestamp/host/runner,
-    # and promotion is skipped entirely when the archive's host is
-    # not this machine — a fresh checkout must not promote lanes from
-    # another box's archived noise.  Capped at 5 promotions per run
-    # (worst warm spread/min first) so one pathological box day
-    # cannot triple the suite's wall clock.  The consumed archive's
-    # identity is echoed in the output as 'auto_promoted_from'.
-    import socket
-
-    auto_promoted: list[str] = []
-    promo_src: dict = {}
-    try:
-        with open(
-            os.path.join(os.path.dirname(__file__), "BENCH_LAST.json")
-        ) as fh:
-            _prev = json.load(fh)
-        auto_promoted, promo_src = promotion_candidates(
-            _prev, QUERIES, MIN_OF_5, socket.gethostname()
-        )
-        MIN_OF_5 |= set(auto_promoted)
-    except Exception:  # noqa: BLE001 - first run / missing archive
-        promo_src = {"skipped": "no readable BENCH_LAST.json archive"}
-
-    def _time(fn, name: str | None = None) -> tuple[float, float, int]:
-        """(min, spread, runs).  Two timed runs; if the best exceeds 2 s
-        a THIRD run is taken: same-code box drift measures ±15-20%, so
-        min-of-2 cannot resolve real sub-20% regressions on the
-        expensive tail (decontamination, triangles) — the >2s club gets
-        one more sample.  MIN_OF_5 lanes take five runs, drop the
-        first (warm-up), and report spread over the three fastest warm
-        runs (trimmed — see MIN_OF_5 comment).  Spread = max−min
-        across the counted runs, reported so round-over-round
-        comparisons can be read against the measured noise.  The raw
-        per-run times land in ``all_runs`` (archived as 'runs_s') so
-        the next run's auto-promotion can read WARM-run spread instead
-        of the cold-inclusive summary spread."""
-        runs = []
-        if name is not None:
-            all_runs[name] = runs
-
-        def one_run():
-            if name in MIN_OF_5:
-                # isolate the lane from earlier lanes' garbage — see
-                # the MIN_OF_5 comment (GC runs outside the clock)
-                spark.sparkContext._jvm.System.gc()
+    def _lane(fn) -> Callable[[], float]:
+        def run() -> float:
             t0 = time.perf_counter()
             try:
                 fn(spark, sf_dir).write.format("noop").mode(
@@ -480,7 +352,7 @@ def main() -> None:
                 ).save()
                 # stop the clock BEFORE the release so the measured
                 # time stays comparable with earlier rounds
-                runs.append(time.perf_counter() - t0)
+                return time.perf_counter() - t0
             finally:
                 # localCheckpoint blocks otherwise accumulate across
                 # the suite and the heap/GC pressure taxes later
@@ -488,55 +360,16 @@ def main() -> None:
                 # finally
                 release_checkpoints(spark)
 
-        # A transient failure on a LATER run must not discard samples
-        # already collected — the first run failing is the real signal.
-        one_run()
-        try:
-            if name in MIN_OF_5:
-                for _ in range(4):
-                    one_run()
-            else:
-                one_run()
-                if min(runs) > 2.0:
-                    one_run()
-        except Exception:  # noqa: BLE001 - keep the good sample(s)
-            pass
-        # Warm-up exclusion + tail trim.  A mid-sequence failure that
-        # leaves only two runs STILL drops the cold run 1 (degrading
-        # to min-of-1-warm), and any MIN_OF_5 lane that completed
-        # fewer than its five runs is flagged in `degraded` — without
-        # the flag a cold-inclusive number would be read against the
-        # steady-state rule the JSON timing string advertises
-        # (round-9 ADVICE, bench.py:354).
-        if name in MIN_OF_5:
-            if len(runs) >= 3:
-                counted = sorted(runs[1:])[:3]
-            elif len(runs) == 2:
-                counted = runs[1:]
-            else:
-                counted = runs
-            if len(runs) < 5:
-                degraded[name] = (
-                    f"min-of-5 lane completed {len(runs)}/5 runs"
-                    + ("" if len(runs) >= 2 else " (cold run only)")
-                )
-        else:
-            counted = runs
-        return (
-            round(min(counted), 3),
-            round(max(counted) - min(counted), 3),
-            len(runs),
-        )
+        return run
 
     # Per-query isolation: one broken lane must not cost the round its
     # entire bench line — failures are reported by name and excluded
     # from the total rather than crashing the run.
-    timings, spreads, nruns, failed, degraded = {}, {}, {}, {}, {}
-    all_runs: dict[str, list[float]] = {}
+    timings, spreads, nruns, failed = {}, {}, {}, {}
     for name in HEADLINE:
         try:
-            timings[name], spreads[name], nruns[name] = _time(
-                QUERIES[name], name
+            timings[name], spreads[name], nruns[name] = time_lane(
+                _lane(QUERIES[name])
             )
         except Exception as e:  # noqa: BLE001 - report, don't die
             failed[name] = (str(e).splitlines() or ['<no message>'])[0][:200]
@@ -554,7 +387,7 @@ def main() -> None:
         AUX.pop("ingest_dedup_store_100k_2k", None)
     for name, fn in AUX.items():
         try:
-            aux[name], spreads[name], nruns[name] = _time(fn, name)
+            aux[name], spreads[name], nruns[name] = time_lane(_lane(fn))
         except Exception as e:  # noqa: BLE001
             failed[name] = (str(e).splitlines() or ['<no message>'])[0][:200]
 
@@ -623,37 +456,11 @@ def main() -> None:
         "runs_per_query": nruns,
         "aux": aux,
         "timing": (
-            "min-of-2; min-of-3 when min > 2s; the 'min_of_5' lanes "
-            "(hand floor + lanes auto-promoted because last run's "
-            "WARM-run spread exceeded its warm min, same-host archive "
-            "only — see 'auto_promoted'/'auto_promoted_from') take 5 "
-            "runs with run 1 dropped as warm-up, a pre-run GC, and "
-            "spread trimmed to the 3 fastest warm runs (steady "
-            "state); lanes that completed fewer runs are listed "
-            "under 'degraded'; raw per-run times in 'runs_s'"
+            f"one untimed warm-up run, then min of {TIMED_RUNS} timed "
+            "runs per lane; spread = max-min of the timed runs; "
+            f"runs_per_query below {TIMED_RUNS} means a later timed "
+            "run failed"
         ),
-        "min_of_5": sorted(MIN_OF_5),
-        "auto_promoted": auto_promoted,
-        # which archive fed the promotion rule (VERDICT r11 item 3:
-        # a judge run once silently overwrote the driver's archive —
-        # provenance makes the feed auditable), or why it was skipped
-        "auto_promoted_from": promo_src,
-        # raw per-run times per lane (run 1 = cold): feeds the NEXT
-        # run's warm-spread promotion rule and lets humans separate
-        # cold-start from steady-state noise without re-running.
-        # Lanes that FAILED are quarantined under 'failed_runs_s'
-        # (round-12 ADVICE: all_runs registers the list before the
-        # lane runs, so a mid-sequence failure used to archive
-        # partial samples under 'runs_s' where the next round's
-        # promotion rule could consume them as warm evidence).
-        "runs_s": {
-            n: [round(r, 3) for r in rs]
-            for n, rs in all_runs.items() if n not in failed
-        },
-        "failed_runs_s": {
-            n: [round(r, 3) for r in rs]
-            for n, rs in all_runs.items() if n in failed
-        },
         "metric": "headline_queries_total_wall_seconds",
         "unit": "sec",
         "n_queries": len(timings),
@@ -672,11 +479,8 @@ def main() -> None:
     }
     if failed:
         result["failed"] = failed
-    if degraded:
-        result["degraded"] = degraded
-    # Full-fidelity archive for the NEXT run's auto-promotion rule
-    # (and for humans: the driver's BENCH_r{N}.json tail truncates).
-    # Written before the print so a broken pipe cannot lose it.
+    # Archive of the run (a stdout capture may keep only the line's
+    # tail).  Written before the print so a broken pipe cannot lose it.
     try:
         with open(
             os.path.join(
@@ -688,25 +492,7 @@ def main() -> None:
             fh.write("\n")
     except Exception:  # noqa: BLE001 - archive is best-effort
         pass
-    # The PRINTED line elides the raw per-run sample maps (round-13
-    # VERDICT item 5): the driver's stdout tail capture has finite
-    # length and the r12 archive lost its whole line when runs_s
-    # outgrew it.  BENCH_LAST.json (above) keeps full fidelity — the
-    # auto-promotion rule and humans read the samples from there; the
-    # printed contract keys (metric/value/unit/queries/sf) and every
-    # graded summary map are unchanged.
-    printed = {
-        # leads the line, so the graded summary keys stay at the tail
-        "runs_s_note": (
-            "per-run samples elided from stdout; see BENCH_LAST.json"
-        ),
-    }
-    printed.update(
-        (k, v)
-        for k, v in result.items()
-        if k not in ("runs_s", "failed_runs_s")
-    )
-    print(json.dumps(printed))
+    print(json.dumps(result))
     spark.stop()
 
 

@@ -6,6 +6,12 @@ The reference's single aggregate: group the batch by ``Country`` and emit
 partial (map-side) + final hash aggregate automatically, so the shuffle
 carries one row per (partition, country) — at 100 TB the network moves
 megabytes, not the table.
+
+The module also holds the scale-safe exact selection operators used
+by the analytics queries: ``exact_percentiles`` and ``mad_spread`` share
+one histogram selection path (no fact shuffle, no per-group task),
+``weighted_median`` prunes with a fixed-width histogram, and
+``global_cumsum`` keeps a global running sum off a single task.
 """
 
 from __future__ import annotations
@@ -14,15 +20,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .materialize import materialize
-
-#: Selection strategy for exact_percentiles / mad_spread.
-#: "histogram" (default): one map-side histogram aggregate locates the
-#: rank-crossing buckets and only those are rescanned — the fact table
-#: is never shuffled (guide §2.3/§2.4).  "range": the round-2..13
-#: range-partitioned distributed selection (kept as the measured
-#: fallback and as the independent implementation the equivalence
-#: tests compare against).
-SELECTION_STRATEGY_CONF = "spark.graft.selection.strategy"
 
 #: Histogram resolution.  Correctness never depends on it (bucket
 #: assignment is a monotone function of the value, and rank extraction
@@ -72,7 +69,6 @@ def exact_percentiles(
     value_col: str,
     ps: list[float],
     aliases: list[str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact interpolated percentiles (``percentile_cont`` semantics)
     per group — the scale-safe formulation.
@@ -80,38 +76,24 @@ def exact_percentiles(
     ``F.percentile``/``F.median`` buffer every group value in the agg
     state, and a ``Window.partitionBy(group)`` sort puts each group on
     ONE task — both die when a few groups hold a fact table's rows.
-    This operator instead computes a distributed selection:
+    This operator instead runs a histogram selection:
 
-    1. range-partition by (group, value) → every partition sort is
-       local, parallel, and spillable;
-    2. per-(partition, group) row counts → a P×G frame whose running
-       sum (a trivially small window) yields each partition's global
-       rank offset — no driver collect, offsets are broadcast-joined;
-    3. global rank = offset + local row_number (window keyed by
-       (partition, group): P×G-way parallelism);
-    4. each requested percentile p needs only ranks
-       ``lo = floor((n-1)p)+1`` and ``lo+1``; all other rows are
-       filtered before the final |groups|-row interpolation agg.
+    1. min/max/count per group (a map-side agg);
+    2. a per-(group, bucket) count histogram — bucket = monotone
+       linear index of the value inside the group's range — whose
+       cumulative counts give each bucket its exclusive rank offset;
+    3. each requested percentile p needs only ranks
+       ``lo = floor((n-1)p)+1`` and ``lo+1``; ONLY the buckets where
+       those ranks fall are rescanned and ranked, then a
+       |groups|-row agg interpolates.
 
     Exactly matches ``percentile_cont``: v_lo*(1-frac) + v_hi*frac with
-    h = (n-1)p.  Ties are safe — equal ranks carry equal values.
-
-    Two strategies (``spark.graft.selection.strategy``):
-
-    - ``histogram`` (default, round 14): min/max/count per group (a
-      map-side agg), then a per-(group, bucket) count histogram —
-      bucket = monotone linear index of the value inside the group's
-      range — then ONLY the buckets where a target rank's cumulative
-      count crosses are rescanned and ranked.  The fact is scanned
-      (projected to 2 columns) but never shuffled: the largest
-      exchange carries |groups| × buckets rows.  Single-valued
-      buckets (all-tie mass, integer-valued columns) resolve straight
-      from the histogram with NO rescan, so mega-ties — the one input
-      the range strategy cannot spread — get cheaper, not slower.
-    - ``range``: the round-2..13 range-partitioned distributed
-      selection below (shuffles the projected fact once); kept as the
-      measured fallback and the independent equivalence witness.
-      ``num_partitions`` only applies here."""
+    h = (n-1)p.  Ties are safe — equal ranks carry equal values.  The
+    fact is scanned (projected to 2 columns) but never shuffled: the
+    largest exchange carries |groups| × buckets rows.  Single-valued
+    buckets (all-tie mass, integer-valued columns) resolve straight
+    from the histogram with NO rescan, so mega-ties get cheaper, not
+    slower."""
     if aliases is None:
         # g-format, dot→underscore: 0.29→p29 (int() would truncate the
         # float error to p28), 0.995→p99_5 (int() would collide with
@@ -119,12 +101,6 @@ def exact_percentiles(
         aliases = [f"p{p * 100:g}".replace(".", "_") for p in ps]
     if len(set(aliases)) != len(aliases):
         raise ValueError(f"duplicate percentile aliases: {aliases}")
-    strategy = df.sparkSession.conf.get(
-        SELECTION_STRATEGY_CONF, "histogram"
-    )
-    if strategy == "range":
-        part = _ranked_partitions(df, group_cols, value_col, num_partitions)
-        return _selection_percentiles(part, group_cols, value_col, ps, aliases)
     w = df.select(*group_cols, value_col).filter(
         F.col(value_col).isNotNull()
     )
@@ -132,56 +108,6 @@ def exact_percentiles(
         w, group_cols, value_col, ps, aliases,
         _selection_stats(w, group_cols, value_col),
     )
-
-
-def _ranked_partitions(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    num_partitions: int | None,
-) -> DataFrame:
-    """Range-partition (group, value) and stamp partition ids.
-
-    Two plan branches (counts and ranks) consume the result, and rank
-    math requires BOTH to see identical range boundaries / _pid
-    assignments.  The range exchange samples its boundaries at run
-    time, so consistency needs the exchange to execute ONCE and be
-    shared:
-
-    - default (``spark.sql.exchange.reuse`` enabled — Spark's default,
-      and AQE's stage-level reuse behaves the same): leave the frame
-      LAZY.  Every consumer branch canonicalizes to the same exchange
-      subplan, Spark materializes that shuffle stage once per job, and
-      all branches read the same output — one job, no extra
-      materialization, boundaries sampled exactly once.  (Round-2 used
-      an eager localCheckpoint here instead; that is safe but splits
-      the query into several jobs that cannot share exchanges, which
-      benchmarked strictly slower.)
-    - fallback (reuse explicitly disabled): eager localCheckpoint pins
-      the materialized result, trading extra jobs for correctness.
-
-    Partition count: ``spark.sql.shuffle.partitions`` unless the caller
-    pins one — the session-level knob a cluster deployment already
-    sizes to its executor memory.  (Leaving the count unspecified for
-    AQE to size benchmarked slower here: the extra adaptive
-    re-planning stages outweigh any coalescing win for a selection
-    whose post-shuffle work is already rank-pruned.)"""
-    spark = df.sparkSession
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    g = [F.col(c) for c in group_cols]
-    v = F.col(value_col)
-    part = (
-        df.select(*group_cols, value_col)
-        # percentile_cont semantics: NULL values are not ranked
-        .filter(v.isNotNull())
-        .repartitionByRange(num_partitions, *g, v)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    if spark.conf.get("spark.sql.exchange.reuse", "true") == "false":
-        part = materialize(part)
-    return part
 
 
 def _ns_broadcast_join(
@@ -211,79 +137,6 @@ def _ns_broadcast_join(
         [F.col(c).eqNullSafe(F.col(tags[c])) for c in cols],
     )
     return left.join(F.broadcast(r), cond).drop(*tags.values())
-
-
-def _selection_percentiles(
-    part: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    ps: list[float],
-    aliases: list[str],
-) -> DataFrame:
-    """Distributed-selection percentile core over a `_ranked_partitions`
-    frame (steps 2-4 of the exact_percentiles docstring).
-
-    Partition pruning before ranking: the per-(partition, group) count
-    frame locates WHICH partitions hold each target rank, and only those
-    slices are ranked — the rank window (whose required hash exchange
-    Catalyst cannot elide, because a checkpointed frame's range
-    distribution is opaque to it) therefore shuffles ~|targets| × n/P
-    rows instead of n.  At 100 TB that is the difference between a
-    metadata-sized exchange and re-shuffling the fact table."""
-    v = F.col(value_col)
-    cnt = part.groupBy("_pid", *group_cols).agg(F.count("*").alias("_pc"))
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # P×G rows: per-partition exclusive rank offset + per-group total
-    off = cnt.select(
-        "_pid",
-        *group_cols,
-        F.col("_pc"),
-        F.coalesce(F.sum("_pc").over(w_off), F.lit(0)).alias("_off"),
-    )
-    n = cnt.groupBy(*group_cols).agg(F.sum("_pc").alias("_n"))
-
-    # Target ranks per (group, percentile): lo = floor((n-1)p)+1 and
-    # lo+1.  A (pid, group) slice is needed iff some target rank lies
-    # in (_off, _off + _pc] — evaluated inline on the P×G offset frame
-    # (one filter, no explode/distinct round-trips), with _n folded in
-    # so ONE broadcast serves the slice filter, the rank offsets, and
-    # the interpolation math.
-    offn = _ns_broadcast_join(off, n, group_cols)
-    hit = F.lit(False)
-    for p in ps:
-        h = (F.col("_n") - 1) * F.lit(float(p))
-        lo = F.floor(h) + 1
-        for r in (lo, lo + 1):
-            hit = hit | (
-                (r > F.col("_off")) & (r <= F.col("_off") + F.col("_pc"))
-            )
-    sel = offn.filter(hit).select("_pid", *group_cols, "_off", "_n")
-
-    w_local = Window.partitionBy("_pid", *group_cols).orderBy(v)
-    ranked = (
-        _ns_broadcast_join(part, sel, ["_pid", *group_cols])
-        .withColumn("_lrn", F.row_number().over(w_local))
-        .withColumn("_rn", F.col("_off") + F.col("_lrn"))
-    )
-
-    needed = F.lit(False)
-    contribs = []
-    for p, name in zip(ps, aliases):
-        h = (F.col("_n") - 1) * F.lit(float(p))
-        lo = F.floor(h) + 1
-        frac = h - F.floor(h)
-        needed = needed | (F.col("_rn") == lo) | (F.col("_rn") == lo + 1)
-        contrib = v.cast("double") * (
-            F.when(F.col("_rn") == lo, F.lit(1.0) - frac)
-            .when(F.col("_rn") == lo + 1, frac)
-            .otherwise(F.lit(0.0))
-        )
-        contribs.append(F.sum(contrib).alias(name))
-    return ranked.filter(needed).groupBy(*group_cols).agg(*contribs)
 
 
 def _selection_stats(
@@ -335,7 +188,7 @@ def _histogram_percentiles(
     - per-(group, bucket) count/min/max + a cumulative window over
       the |G|·NB-row histogram gives each bucket its exclusive rank
       offset ``_coff``; target ranks are lo = floor((n−1)p)+1 and
-      lo+1, exactly the range strategy's.
+      lo+1 (1-based, over the group's values in ascending order).
     - a crossing bucket with _bmin == _bmax (or NaN) holds one
       distinct value, so rank order inside it is irrelevant: its
       contribution is emitted straight from the histogram row.
@@ -344,11 +197,11 @@ def _histogram_percentiles(
       disjoint per group, so this reproduces bucket membership
       exactly without re-deriving the bucket index), row_number
       within the (group, bucket) slice + _coff = global rank, then
-      the SAME v·((1−frac)|frac) interpolation expression as the
-      range strategy.  Per (group, percentile) at most two nonzero
-      terms exist across both frames, and IEEE addition of two terms
-      is commutative, so the summed result is bit-identical to the
-      range strategy's.
+      the v·((1−frac)|frac) interpolation terms.  Per (group,
+      percentile) at most two nonzero terms exist across both frames,
+      and IEEE addition of two terms is commutative, so the summed
+      result is bit-identical to v_lo·(1−frac) + v_hi·frac computed
+      over the sorted group.
 
     The hot expressions are built as SQL strings through one
     ``F.expr`` each (double literals carry the ``D`` suffix — an
@@ -403,7 +256,7 @@ def _histogram_percentiles(
         "AS _coff",
     )
 
-    # rank targets, verbatim from _selection_percentiles: lo and lo+1
+    # rank targets: lo and lo+1
     # per requested p (lo+1 rides along even at frac==0, where its
     # weight is 0.0 — keeping the selected-row set identical).
     # repr(float(p)) round-trips the exact IEEE double into the SQL
@@ -499,47 +352,18 @@ def mad_spread(
     value_col: str,
     med_alias: str = "med",
     mad_alias: str = "mad",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Fused median + median-absolute-deviation per group.
 
     MAD is inherently two selection passes (deviations need the median
-    first).  Both ride the ``exact_percentiles`` strategy switch:
-
-    - ``histogram`` (default): pass 1 is the histogram selection; pass
-      2 buckets the deviations with bounds DERIVED from pass 1's
-      stats + median (devs lie in [0, max(gmax−med, med−gmin)] — both
-      sides weakly monotone under IEEE rounding, and the bucket index
-      clamps, so even an ulp-loose bound stays exact), skipping the
-      deviation min/max scan entirely.  No pass shuffles the fact.
-    - ``range``: one lazy plan whose pass-1 range exchange is shared
-      (exchange reuse) by its count/rank branches, the broadcast-
-      median branch, and pass 2's input.  (Round-2 eagerly
-      checkpointed between passes; that split the query into jobs
-      that re-executed the pass-1 exchange and benchmarked ~35%
-      slower.)
+    first), both the ``exact_percentiles`` histogram selection.  Pass 2
+    buckets the deviations with bounds DERIVED from pass 1's stats +
+    median (devs lie in [0, max(gmax−med, med−gmin)] — both sides
+    weakly monotone under IEEE rounding, and the bucket index clamps,
+    so even an ulp-loose bound stays exact), skipping the deviation
+    min/max scan entirely.  No pass shuffles the fact.
 
     Output: one row per group with ``med_alias``/``mad_alias``."""
-    strategy = df.sparkSession.conf.get(
-        SELECTION_STRATEGY_CONF, "histogram"
-    )
-    if strategy == "range":
-        part1 = _ranked_partitions(df, group_cols, value_col, num_partitions)
-        med = _selection_percentiles(
-            part1, group_cols, value_col, [0.5], [med_alias]
-        )
-        dev = (
-            _ns_broadcast_join(part1, med, group_cols)
-            .select(
-                *group_cols,
-                F.abs(F.col(value_col) - F.col(med_alias)).alias("_dev"),
-            )
-        )
-        part2 = _ranked_partitions(dev, group_cols, "_dev", num_partitions)
-        mad = _selection_percentiles(
-            part2, group_cols, "_dev", [0.5], [mad_alias]
-        )
-        return _ns_broadcast_join(med, mad, group_cols)
     w = df.select(*group_cols, value_col).filter(
         F.col(value_col).isNotNull()
     )
@@ -591,11 +415,11 @@ def global_cumsum(
     part = df.repartitionByRange(num_partitions, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    # same branch-consistency requirement as exact_percentiles: the
-    # offset branch and the cumsum branch must agree on _pid (eager
-    # checkpoint, not persist — see exact_percentiles).  Round-13
-    # counterfactual: replacing this with the lazy shared-exchange
-    # trick _ranked_partitions uses measured STRICTLY SLOWER on every
+    # the offset branch and the cumsum branch must agree on _pid, and
+    # the range exchange samples its boundaries at run time, so the
+    # frame is pinned by an eager checkpoint.  Round-13
+    # counterfactual: leaving it lazy (two branches sharing one
+    # exchange through exchange reuse) measured STRICTLY SLOWER on every
     # caller (peak_concurrent_sessions 1.8 s -> 2.1 s steady-state,
     # same-session A/B) — unlike the percentile operator, whose input
     # is a bare projected scan, global_cumsum's callers feed it

@@ -54,8 +54,9 @@ def skyline_2d(
         .repartitionByRange(num_partitions, x.desc(), y.desc())
         .withColumn("_pid", F.spark_partition_id())
     )
-    # _pid feeds a self-consistent window; one consumer only, but the
-    # exchange-reuse rule from exact_percentiles applies if reuse is off
+    # _pid feeds a self-consistent window; the range exchange samples
+    # its boundaries at run time, so with exchange reuse off every
+    # branch must read one eagerly pinned _pid assignment
     if spark.conf.get("spark.sql.exchange.reuse", "true") == "false":
         pts = materialize(pts)
 

@@ -68,10 +68,8 @@ class PipelineConfig:
     summary_scope: str = "cumulative"  # or "batch" (reference-exact quirk)
     jdbc_url: str | None = None  # real serving DB (S6/S7/S9); None = parquet
     jdbc_properties: dict = field(default_factory=dict)
-    dates_as_strings: bool = True  # serving tables restringify dates
     delete_raw: bool = False
     notifier: Notifier | None = None
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         # the two scopes compute DIFFERENT numbers by design, so a typo
@@ -126,10 +124,10 @@ def land_valid_batch(
     append_log_idempotent(
         spark, valid.drop(*PROVENANCE_COLUMNS), cfg.lake_dir, batch_id
     )
+    # serving tables restringify dates (lambda.py:168-169)
     serving = valid
-    if cfg.dates_as_strings:
-        for c in SALES_DATE_COLUMNS:
-            serving = serving.withColumn(c, format_date(c))
+    for c in SALES_DATE_COLUMNS:
+        serving = serving.withColumn(c, format_date(c))
     logged = serving.drop(*PROVENANCE_COLUMNS)
 
     # 1) append-only log (reference S6, lambda.py:172)

@@ -65,7 +65,6 @@ def test_exact_percentiles_matches_builtin(spark, sf_dir):
             "l_extendedprice",
             [0.0, 0.25, 0.5, 0.9, 1.0],
             ["p0", "p25", "p50", "p90", "p100"],
-            num_partitions=7,
         ).collect()
     }
     want = {
@@ -128,8 +127,7 @@ def test_exact_percentiles_ignores_nulls(spark):
     )
     out = {
         r["g"]: r["p50"]
-        for r in exact_percentiles(df, ["g"], "v", [0.5], ["p50"],
-                                   num_partitions=3).collect()
+        for r in exact_percentiles(df, ["g"], "v", [0.5], ["p50"]).collect()
     }
     assert out == {"a": 2.0, "b": 10.0}
 
@@ -159,8 +157,7 @@ def test_exact_percentiles_property_random(spark):
     names = [f"q{i}" for i in range(len(ps))]
     got = {
         r["g"]: r
-        for r in exact_percentiles(df, ["g"], "v", ps, names,
-                                   num_partitions=5).collect()
+        for r in exact_percentiles(df, ["g"], "v", ps, names).collect()
     }
     want = {
         r["g"]: r
@@ -293,15 +290,27 @@ def test_mad_spread_matches_naive(spark):
         assert got[g] == (med, mad), (g, got[g], (med, mad))
 
 
-def test_selection_strategies_bit_identical(spark):
-    """The round-14 histogram selection must return BIT-identical
-    doubles to the round-2..13 range selection (same interpolation
-    expression, ≤2 nonzero terms per percentile, commutative adds) on
-    adversarial data: mega-ties (single-valued buckets resolve from
-    the histogram without rescan), all-equal groups (span 0 → one
-    bucket), single-row groups, negatives, and skewed cardinalities.
-    mad_spread additionally exercises the derived-bounds pass-2
-    bucketing."""
+def _percentile_cont(vals, p):
+    """Independent reference: ``percentile_cont`` over the sorted
+    values, s[lo]*(1-f) + s[lo+1]*f with h = (n-1)*p (0-based lo)."""
+    import math
+
+    s = sorted(vals)
+    h = (len(s) - 1) * p
+    lo = math.floor(h)
+    f = h - lo
+    hi = s[lo + 1] * f if lo + 1 < len(s) else 0.0
+    return s[lo] * (1.0 - f) + hi
+
+
+def test_selection_bit_identical_to_reference(spark):
+    """The histogram selection must return BIT-identical doubles to a
+    pure-Python percentile_cont (≤2 nonzero interpolation terms per
+    percentile, commutative adds) on adversarial data: mega-ties
+    (single-valued buckets resolve from the histogram without
+    rescan), all-equal groups (span 0 → one bucket), single-row
+    groups, negatives, and skewed cardinalities.  mad_spread
+    additionally exercises the derived-bounds pass-2 bucketing."""
     import random
 
     from enterprise_sales_data_pipeline_using_aws_lambda_spark.operators.agg import (
@@ -323,32 +332,27 @@ def test_selection_strategies_bit_identical(spark):
 
     ps = [0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0]
     names = [f"q{i}" for i in range(len(ps))]
+    pct = {
+        r["g"]: tuple(r[n] for n in names)
+        for r in exact_percentiles(df, ["g"], "v", ps, names).collect()
+    }
+    mad = {
+        r["g"]: (r["med"], r["mad"])
+        for r in mad_spread(df, ["g"], "v").collect()
+    }
 
-    def run(strategy):
-        spark.conf.set("spark.graft.selection.strategy", strategy)
-        try:
-            pct = {
-                r["g"]: tuple(r[n] for n in names)
-                for r in exact_percentiles(df, ["g"], "v", ps, names,
-                                           num_partitions=5).collect()
-            }
-            mad = {
-                r["g"]: (r["med"], r["mad"])
-                for r in mad_spread(df, ["g"], "v",
-                                    num_partitions=5).collect()
-            }
-        finally:
-            spark.conf.unset("spark.graft.selection.strategy")
-        return pct, mad
-
-    pct_h, mad_h = run("histogram")
-    pct_r, mad_r = run("range")
-    assert set(pct_h) == set(pct_r) == {"big", "tie", "flat", "one"}
-    for g in pct_r:
-        # exact equality, not approx: both strategies must emit the
-        # same IEEE doubles or the oracle's grid rounding can flip
-        assert pct_h[g] == pct_r[g], (g, pct_h[g], pct_r[g])
-        assert mad_h[g] == mad_r[g], (g, mad_h[g], mad_r[g])
+    groups = {}
+    for g, v in rows:
+        groups.setdefault(g, []).append(v)
+    assert set(pct) == set(mad) == set(groups)
+    for g, vals in groups.items():
+        want_pct = tuple(_percentile_cont(vals, p) for p in ps)
+        med = _percentile_cont(vals, 0.5)
+        want_mad = (med, _percentile_cont([abs(v - med) for v in vals], 0.5))
+        # exact equality, not approx: the operators must emit the
+        # reference's IEEE doubles or the oracle's grid rounding can flip
+        assert pct[g] == want_pct, (g, pct[g], want_pct)
+        assert mad[g] == want_mad, (g, mad[g], want_mad)
 
 
 def test_sequence_packing_invariants(spark, sf_dir):

@@ -13,16 +13,19 @@ from enterprise_sales_data_pipeline_using_aws_lambda_spark.pipeline import (
 )
 
 @pytest.fixture()
-def cfg(tmp_path):
-    notices = []
-    c = PipelineConfig(
+def notices():
+    """(status, payload) pairs the ``cfg`` fixture's notifier saw."""
+    return []
+
+
+@pytest.fixture()
+def cfg(tmp_path, notices):
+    return PipelineConfig(
         lake_dir=str(tmp_path / "lake"),
         warehouse_dir=str(tmp_path / "wh"),
         quarantine_dir=str(tmp_path / "quarantine"),
         notifier=lambda s, p: notices.append((s, p)),
     )
-    c.extra["notices"] = notices
-    return c
 
 
 def test_csv_happy_path(spark, cfg, sales_sample):
@@ -79,7 +82,7 @@ def test_json_format_equivalence(spark, cfg, tmp_path, sales_sample):
 
 
 def test_validation_failure_quarantines_with_reason(
-    spark, cfg, tmp_path, sales_sample
+    spark, cfg, notices, tmp_path, sales_sample
 ):
     df = pd.read_csv(sales_sample.csv)
     df.loc[1, "uuid"] = df.loc[0, "uuid"]
@@ -94,7 +97,7 @@ def test_validation_failure_quarantines_with_reason(
     # validation failure notifies too (divergence from the reference,
     # which skips SNS on this path — SURVEY §3.3)
     assert ("failed", {"file": bad, "error": "Duplicate uuid values found"}) in [
-        (s, p) for s, p in cfg.extra["notices"]
+        (s, p) for s, p in notices
     ]
 
 

@@ -292,77 +292,53 @@ def test_plan_digest_baseline_tripwire(spark):
     )
 
 
-def test_bench_promotion_warm_spread_and_provenance_guards():
-    """Round-11 VERDICT item 3 + ADVICE (low): the min-of-5
-    auto-promotion must (a) never consume another machine's archived
-    noise (a fresh checkout carries the committed BENCH_LAST.json from
-    whatever box wrote it), and (b) read WARM-run spread only — the
-    old cold-inclusive spread promoted lanes whose only 'noise' was
-    run-1 cold-start, which min-of-5 drops anyway."""
-    import socket
+def test_bench_time_lane_warmup_and_failures():
+    """bench.py's one timing rule, driven by a fake lane that reports
+    canned seconds: one untimed warm-up, then exactly TIMED_RUNS timed
+    runs (min + max-min spread over those only); a failure after the
+    first timed run keeps the earlier samples; a warm-up failure
+    propagates, which main() reports under 'failed'."""
+    import pytest
 
     import bench
 
-    host = socket.gethostname()
-    registered = {"lane_coldstart", "lane_noisy", "lane_two_runs",
-                  "lane_small"}
+    k = bench.TIMED_RUNS
+    assert k >= 2
 
-    # cross-host archive: promotion skipped entirely, reason recorded
-    prev = {"host": "some-other-box", "runs_s": {
-        "lane_noisy": [9.0, 3.0, 8.0, 3.1, 7.9]}}
-    promoted, src = bench.promotion_candidates(
-        prev, registered, set(), host)
-    assert promoted == [] and "not this host" in src["skipped"]
+    def fake_lane(samples):
+        calls = []
 
-    # pre-round-12 archive (no runs_s): skipped, not guessed from the
-    # cold-inclusive summary spread
-    promoted, src = bench.promotion_candidates(
-        {"host": host, "spread": {"lane_noisy": 9.9},
-         "queries": {"lane_noisy": 1.0}}, registered, set(), host)
-    assert promoted == [] and "per-lane run lists" in src["skipped"]
+        def run():
+            calls.append(len(calls))
+            s = samples[len(calls) - 1]
+            if isinstance(s, Exception):
+                raise s
+            return s
 
-    prev = {
-        "host": host, "git_head": "abc1234", "timestamp": "t",
-        "runner": "tester",
-        "runs_s": {
-            # pure cold-start artifact (the ref_upsert shape in the
-            # round-11 archive): cold 2.6 s then one warm run — no
-            # warm-noise evidence, must NOT promote
-            "lane_coldstart": [2.569, 1.195],
-            # genuinely noisy warm runs: 4.0 vs 0.9 warm spread > min
-            "lane_noisy": [5.0, 1.0, 5.0, 0.9, 4.9],
-            # min>2s 3-run lane with quiet warm runs: no promotion
-            "lane_two_runs": [6.0, 3.0, 3.2],
-            # noisy but sub-0.5s absolute: micro-jitter, no promotion
-            "lane_small": [0.9, 0.1, 0.4],
-            # noisy but not registered: ineligible
-            "lane_unregistered": [9.0, 1.0, 9.0],
-        },
-    }
-    promoted, src = bench.promotion_candidates(
-        prev, registered, set(), host)
-    assert promoted == ["lane_noisy"]
-    assert src["git_head"] == "abc1234" and src["host"] == host
+        return run, calls
 
-    # already min-of-5 lanes are never re-promoted
-    promoted, _ = bench.promotion_candidates(
-        prev, registered, {"lane_noisy"}, host)
-    assert promoted == []
+    # warm-up (100.0, slowest) is excluded from min and spread
+    run, calls = fake_lane([100.0] + [2.0 + i for i in range(k)] + [0.5])
+    assert bench.time_lane(run) == (2.0, float(k - 1), k)
+    assert len(calls) == 1 + k  # the trailing 0.5 is never taken
 
-    # round-12 ADVICE (low): a lane the archive marks FAILED may still
-    # carry partial runs_s (the run list is registered before the lane
-    # runs) — those samples are not promotion evidence
-    prev_failed = dict(prev)
-    prev_failed["failed"] = {"lane_noisy": "boom on run 4"}
-    promoted, _ = bench.promotion_candidates(
-        prev_failed, registered, set(), host)
-    assert promoted == []
+    # a failure on the last timed run keeps the k-1 earlier samples
+    good = [3.0 - 0.5 * i for i in range(k - 1)]
+    run, calls = fake_lane([100.0, *good, RuntimeError("boom"), 0.1])
+    assert bench.time_lane(run) == (min(good), max(good) - min(good), k - 1)
+    assert len(calls) == 1 + k
+
+    # a warm-up failure propagates (no sample taken)
+    run, calls = fake_lane([RuntimeError("cold boom"), 1.0, 1.0, 1.0])
+    with pytest.raises(RuntimeError, match="cold boom"):
+        bench.time_lane(run)
+    assert len(calls) == 1
 
 
 def test_bench_runner_stamp_defaults_to_attributable_actor():
     """Round-12 VERDICT item 4: without SPARK_GRAFT_BENCH_RUNNER the
-    archives stamped runner='unspecified', making the promotion audit
-    trail unattributable.  The fallback is user@host:pid from public
+    archives stamped runner='unspecified', making the archive
+    unattributable.  The fallback is user@host:pid from public
     stdlib APIs; the env var still wins when set."""
     import getpass
     import os
