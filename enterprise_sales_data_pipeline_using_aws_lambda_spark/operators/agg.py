@@ -29,9 +29,8 @@ from .materialize import materialize
 #: 4096 keeps the local histogram trivially small; at 100 TB size it
 #: like shuffle.partitions: pick buckets so n/buckets fits one task
 #: (e.g. 65536 puts a 1e12-row group's slice at ~15M rows).  Purely a
-#: balance knob — both extremes stay exact.
-HISTOGRAM_BUCKETS_CONF = "spark.graft.selection.histogramBuckets"
-HISTOGRAM_BUCKETS_DEFAULT = 4096
+#: balance constant — both extremes stay exact.
+HISTOGRAM_BUCKETS = 4096
 
 
 def sales_summary(
@@ -211,12 +210,7 @@ def _histogram_percentiles(
     round-trips per build (guide §1 / VERDICT r13 item 2), a fixed
     driver-side tax the string form removes without touching the
     plan."""
-    spark = w.sparkSession
-    nb = int(
-        spark.conf.get(
-            HISTOGRAM_BUCKETS_CONF, str(HISTOGRAM_BUCKETS_DEFAULT)
-        )
-    )
+    nb = HISTOGRAM_BUCKETS
     g = [f"`{c}`" for c in group_cols]
     gl = ", ".join(g)
     v = f"`{value_col}`"

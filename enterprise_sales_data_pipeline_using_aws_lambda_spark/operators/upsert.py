@@ -40,15 +40,16 @@ def upsert_keep_last(
     ``broadcast_keys=True`` force-broadcasts the incoming key set for the
     anti-join — set it when the batch is known-small (the per-file ingest
     case); otherwise AQE picks broadcast vs shuffled join from runtime
-    stats, which is the safe default for arbitrary batch sizes.
+    stats, which is the safe default for arbitrary batch sizes.  The
+    broadcast build side keeps repeated keys (an anti-join only asks
+    whether a key is present), which saves the ``distinct`` shuffle job.
     """
     if order_by is not None:
         incoming = dedup_keep_last(incoming, keys, order_by)
     if existing is None:
         return incoming
-    key_set = incoming.select(*keys).distinct()
-    if broadcast_keys:
-        key_set = F.broadcast(key_set)
+    key_set = incoming.select(*keys)
+    key_set = F.broadcast(key_set) if broadcast_keys else key_set.distinct()
     keep_old = existing.join(key_set, on=keys, how="left_anti")
     return keep_old.unionByName(incoming)
 

@@ -7,11 +7,13 @@ validation doubles as the date-casting stage.
 
 Two modes:
 - :func:`validate_batch` — reference-exact file-level semantics: returns
-  the error list plus the (date-cast) DataFrame.  Checks that are pure
-  schema checks (V1, V2) run on ``df.schema`` with **zero scans**; the
-  data checks (V3 date parse, V4 uniqueness) run in **one** aggregate job
-  instead of one pass per rule — at 100 TB you pay a single scan, not
-  four.
+  the error list plus the date-cast DataFrame, pinned.  Checks that are
+  pure schema checks (V1, V2) run on ``df.schema`` with **zero scans**;
+  the data checks (V3 date parse, V4 uniqueness) and the caller's run
+  metrics are ``observe`` metrics of the **one** pass that pins the
+  date-cast frame (a key-partitioned shuffle plus the pin: two jobs),
+  so the sinks downstream reuse the pinned rows instead of re-parsing
+  the input, and no rule costs a pass of its own.
 - :func:`validate_rows` — the engine's finer-grained mode: splits into
   (valid, quarantined-with-reason) row sets in one pass, fixing the
   reference's dropped-reason bug (``lambda.py:123-139``).
@@ -21,7 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -32,6 +34,7 @@ from ..schema import (
     SALES_NUMERIC_COLUMNS,
     SALES_REQUIRED_COLUMNS,
 )
+from .materialize import materialize
 
 _NUMERIC_TYPES = (
     T.ByteType,
@@ -51,6 +54,9 @@ class ValidationResult:
 
     df: DataFrame
     errors: list[str] = field(default_factory=list)
+    #: The caller's run metrics (``validate_batch(metrics=...)``),
+    #: by alias; empty when V1 or V2 failed.
+    metrics: dict = field(default_factory=dict)
 
     @property
     def ok(self) -> bool:
@@ -64,6 +70,7 @@ def validate_batch(
     dates: list[str] | None = None,
     key: str | None = SALES_KEY_COLUMN,
     date_format: str = SALES_DATE_FORMAT,
+    metrics: list[Column] | None = None,
 ) -> ValidationResult:
     """File-level validation, reference-exact semantics.
 
@@ -72,7 +79,13 @@ def validate_batch(
     V2 non-numeric dtype → error per column;
     V3 unparseable date → error per column (success casts to DateType);
     V4 duplicate key → error.
-    All data-dependent checks are folded into a single aggregate scan.
+
+    V3 and V4 are metrics of one ``Observation`` on the pass that pins
+    the date-cast frame; ``metrics`` (aliased aggregates, e.g. a row
+    count) ride the same observation when V1 and V2 pass, and their
+    values come back in :attr:`ValidationResult.metrics`.  On success
+    ``df`` of the result is that pinned frame; on failure it is the
+    input, untouched (the quarantine keeps the raw values).
     """
     required = SALES_REQUIRED_COLUMNS if required is None else required
     numeric = SALES_NUMERIC_COLUMNS if numeric is None else numeric
@@ -92,7 +105,6 @@ def validate_batch(
             # dtype checking (lambda.py:96-100).
             errors.append(f"Column {c} must be numeric")
 
-    # One aggregate pass for date-parse failures + key duplicates.
     # Already-temporal date columns (DateType/Timestamp — e.g. a lake
     # frame re-driven through the gate, or validate_batch's own output)
     # are trivially valid: casting them to string yields ISO
@@ -101,47 +113,69 @@ def validate_batch(
     # every row (the pandas reference's to_datetime succeeds on
     # datetime64 regardless of format, so validation is idempotent
     # there).
-    aggs: list[Column] = []
-    date_checks: list[str] = []
-    temporal_dates: set[str] = set()
-    for c in dates:
-        if c not in cols:
-            continue
-        date_checks.append(c)
-        if isinstance(dtypes[c], _TEMPORAL):
-            temporal_dates.add(c)
-            continue
-        parsed = F.try_to_date(F.col(c).cast("string"), date_format)
-        bad = F.col(c).isNotNull() & parsed.isNull()
-        aggs.append(F.sum(bad.cast("long")).alias(f"_bad_{c}"))
+    date_cols = [c for c in dates if c in cols]
+    parsed = {f"_date_{c}": _to_date(c, dtypes[c], date_format)
+              for c in date_cols}
+    checks = [
+        F.sum(
+            (F.col(c).isNotNull() & F.col(f"_date_{c}").isNull()).cast("long")
+        ).alias(f"_bad_{c}")
+        for c in date_cols
+        if not isinstance(dtypes[c], _TEMPORAL)
+    ]
+    checked = df.withColumns(parsed)
     check_key = key is not None and key in cols
     if check_key:
-        aggs.append(F.count(F.col(key)).alias("_key_count"))
-        aggs.append(F.count_distinct(F.col(key)).alias("_key_distinct"))
-        # count()/count_distinct() both SKIP nulls, so two NULL keys
-        # would slip through the equality check — while the reference's
-        # pandas Series.is_unique flags repeated NaN as duplicates
-        # (and NULL keys would accumulate forever in the keyed upsert,
-        # whose equi anti-join never matches NULL).
-        aggs.append(
-            F.sum(F.col(key).isNull().cast("long")).alias("_key_nulls")
+        # A window partition holds every NULL key in one group, so two
+        # NULL keys are a duplicate, as the reference's pandas
+        # Series.is_unique has it (and NULL keys would accumulate
+        # forever in the keyed upsert, whose equi anti-join never
+        # matches NULL).
+        checked = checked.withColumn(
+            "_key_rows", F.count(F.lit(1)).over(Window.partitionBy(key))
         )
+        checks.append(
+            F.sum((F.col("_key_rows") > 1).cast("long")).alias("_dup_rows")
+        )
+    # Run metrics only over a schema that passed V1/V2: a sum over a
+    # string column would replace the V2 message by a cast error.
+    run_metrics = [] if errors else list(metrics or [])
+    if not checks and not run_metrics:
+        return ValidationResult(df=df, errors=errors)
 
-    if aggs:
-        row = df.agg(*aggs).collect()[0]
-        for c in date_checks:
-            if c in temporal_dates:
-                continue
-            if (row[f"_bad_{c}"] or 0) > 0:
-                errors.append(f"Invalid date format in column {c}")
-        if check_key and (
-            row["_key_count"] != row["_key_distinct"]
-            or (row["_key_nulls"] or 0) > 1
-        ):
-            errors.append(f"Duplicate {key} values found")
+    # The observation sits ABOVE the window: observed below its
+    # exchange, a zero-row batch fails Observation.get.  try_to_date
+    # because a plain (ANSI) to_date would raise on a bad date before
+    # the V3 verdict is read.
+    obs = Observation()
+    pinned = materialize(
+        checked.observe(obs, *checks, *run_metrics)
+        .withColumns({c: F.col(f"_date_{c}") for c in date_cols})
+        .drop(*parsed, "_key_rows")
+    )
+    values = obs.get
+    for c in date_cols:
+        if (values.get(f"_bad_{c}") or 0) > 0:
+            errors.append(f"Invalid date format in column {c}")
+    if check_key and (values["_dup_rows"] or 0) > 0:
+        errors.append(f"Duplicate {key} values found")
+    if errors:
+        return ValidationResult(df=df, errors=errors)
+    checked_names = {f"_bad_{c}" for c in date_cols} | {"_dup_rows"}
+    return ValidationResult(
+        df=pinned,
+        metrics={k: v for k, v in values.items() if k not in checked_names},
+    )
 
-    out = df if errors else cast_dates(df, date_checks, date_format)
-    return ValidationResult(df=out, errors=errors)
+
+def _to_date(c: str, dtype: T.DataType, date_format: str) -> Column:
+    """``c`` as DateType: temporal columns truncate; string columns
+    parse with ``date_format``, NULL where they do not parse.
+    Re-parsing a temporal column's ISO string form with ``M/d/yyyy``
+    would null it."""
+    if isinstance(dtype, _TEMPORAL):
+        return F.to_date(F.col(c))
+    return F.try_to_date(F.col(c).cast("string"), date_format)
 
 
 def cast_dates(
@@ -151,20 +185,13 @@ def cast_dates(
 ) -> DataFrame:
     """V3's success cast: every present date column to DateType in
     place, matching the reference's mutate-on-success
-    (``lambda.py:107``).  Temporal columns truncate straight to
-    DateType; re-parsing their ISO string form with ``M/d/yyyy`` would
-    null them."""
+    (``lambda.py:107``).  For rows that passed V3; an unparseable
+    value would become NULL."""
     dates = SALES_DATE_COLUMNS if dates is None else dates
     dtypes = {f.name: f.dataType for f in df.schema.fields}
-    for c in dates:
-        if c in dtypes:
-            df = df.withColumn(
-                c,
-                F.to_date(F.col(c))
-                if isinstance(dtypes[c], _TEMPORAL)
-                else F.to_date(F.col(c).cast("string"), date_format),
-            )
-    return df
+    return df.withColumns(
+        {c: _to_date(c, dtypes[c], date_format) for c in dates if c in dtypes}
+    )
 
 
 def row_rules_sales(date_format: str = SALES_DATE_FORMAT) -> dict[str, Column]:

@@ -4,10 +4,13 @@ Only the stages the fusion changes are timed; sigs are the smoke's lazy
 synthetic frame (pinning 1M x 64-long arrays OOMs the 8g driver heap;
 the regeneration is the same cheap map on both A/B sides).
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+)
 
 from pyspark.sql import functions as F
 

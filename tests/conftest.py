@@ -8,7 +8,8 @@ from types import SimpleNamespace
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from enterprise_sales_data_pipeline_using_aws_lambda_spark.session import (  # noqa: E402
     get_spark,
@@ -70,7 +71,6 @@ def sales_df(spark, sales_rows):
 
 #: The reference repository's own sample files, used when it is checked
 #: out as ``reference/`` beside this repository.
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REFERENCE_SAMPLE_DIR = os.path.join(
     os.path.dirname(REPO_ROOT), "reference", "sample_data"
 )

@@ -2,6 +2,7 @@
 sample fixtures, plus quarantine and idempotency paths."""
 
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -102,7 +103,9 @@ def test_validation_failure_quarantines_with_reason(
 
 
 def test_unsupported_extension_fails_cleanly(spark, cfg):
-    r = run_batch(spark, "/root/repo/README.md", cfg)
+    r = run_batch(
+        spark, os.path.join(os.path.dirname(__file__), "..", "README.md"), cfg
+    )
     assert r["status"] == "failed"
     assert "Unsupported file format" in r["error"]
 
@@ -152,7 +155,7 @@ def test_json_record_array_form(spark, tmp_path, sales_sample):
 
 def test_observed_ingest_metrics(spark, tmp_path, sales_sample):
     """run_batch returns observe()-collected metrics (row count, revenue,
-    distinct keys) measured on the lake-write job itself — no extra pass."""
+    distinct keys) observed on the validation pass itself — no extra pass."""
     cfg = PipelineConfig(
         lake_dir=str(tmp_path / "lake"),
         warehouse_dir=str(tmp_path / "wh"),
@@ -183,6 +186,91 @@ def test_header_only_csv(spark, cfg, tmp_path, sales_sample):
     r2 = run_batch(spark, sales_sample.csv, cfg)
     assert r2["status"] == "success"
     assert spark.read.parquet(f"{cfg.warehouse_dir}/sales_tgt").count() == 500
+
+
+def test_valid_batch_is_ten_jobs_in_the_callers_group(
+    spark, cfg, sales_sample, monkeypatch
+):
+    """One valid run_batch onto an existing sales_tgt launches 10 Spark
+    jobs: the validation shuffle and pin (2), the lake and sales
+    appends (1 + 1), sales_tgt schema inference (1), the broadcast key
+    set (1), the merged pin (1), the sales_tgt write (1), the summary
+    shuffle and write (1 + 1).  The appends run on a worker thread; the
+    jobs it launches carry the caller's job group, and no job of the
+    call escapes it."""
+    import threading
+
+    import enterprise_sales_data_pipeline_using_aws_lambda_spark.pipeline as pl
+
+    sc = spark.sparkContext
+    assert run_batch(spark, sales_sample.csv, cfg)["status"] == "success"
+
+    seen = []
+    real_append = pl.append_log_idempotent
+
+    def recording_append(*a, **kw):
+        seen.append(
+            (threading.get_ident(), sc.getLocalProperty("spark.jobGroup.id"))
+        )
+        return real_append(*a, **kw)
+
+    monkeypatch.setattr(pl, "append_log_idempotent", recording_append)
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("one_valid_batch", "valid run_batch job count")
+    try:
+        r = run_batch(spark, sales_sample.json, cfg)
+    finally:
+        sc.setJobGroup(None, None)
+    assert r["status"] == "success"
+    assert len(sc.statusTracker().getJobIdsForGroup("one_valid_batch")) == 10
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+    # lake and sales appends, each off the calling thread, in its group
+    assert len(seen) == 2
+    assert all(t != threading.get_ident() for t, _ in seen)
+    assert [g for _, g in seen] == ["one_valid_batch"] * 2
+
+
+def test_torn_sales_tgt_fails_instead_of_rebuilding(spark, cfg, sales_sample):
+    """A sales_tgt overwrite that crashed mid-commit leaves a directory
+    holding only ``_temporary/``.  The next batch must fail on it, not
+    read it as an empty table and rewrite sales_tgt as that batch alone
+    (which a read with a declared schema would do: it returns 0 rows)."""
+    assert run_batch(spark, sales_sample.csv, cfg)["status"] == "success"
+    tgt = f"{cfg.warehouse_dir}/sales_tgt"
+    shutil.rmtree(tgt)
+    os.makedirs(f"{tgt}/_temporary/0")
+
+    r = run_batch(spark, sales_sample.json, cfg)
+    assert r["status"] == "failed"
+    assert "UNABLE_TO_INFER_SCHEMA" in r["error"]
+    assert os.listdir(tgt) == ["_temporary"]
+
+
+def test_string_revenue_quarantines_with_the_v2_message(
+    spark, cfg, sales_sample
+):
+    """A non-numeric TotalRevenue fails V2 with its own message; the run
+    metrics (a sum over TotalRevenue) must not turn it into a cast
+    error, and the frame lands in quarantine only."""
+    from enterprise_sales_data_pipeline_using_aws_lambda_spark.pipeline import (
+        run_batch_frame,
+    )
+    from enterprise_sales_data_pipeline_using_aws_lambda_spark.sources.readers import (  # noqa: E501
+        read_sales,
+    )
+
+    df = read_sales(spark, sales_sample.csv).withColumn(
+        "TotalRevenue", F.concat(F.lit("$"), F.col("TotalRevenue"))
+    )
+    r = run_batch_frame(spark, df, "string_revenue.csv", cfg, "b_str")
+    assert r["status"] == "failed"
+    assert r["error"] == "Column TotalRevenue must be numeric"
+    q = spark.read.parquet(cfg.quarantine_dir)
+    assert q.count() == df.count()
+    assert {x[0] for x in q.select("_error_reason").distinct().collect()} == {
+        "Column TotalRevenue must be numeric"
+    }
+    assert not os.path.exists(cfg.lake_dir)
 
 
 def test_reprocess_quarantine_redrive(spark, cfg, tmp_path, sales_sample):

@@ -13,9 +13,11 @@ import duckdb
 import numpy as np
 import pandas as pd
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from tools.check_oracle import UnhashableOutput, dtype_drift, frame_rowset  # noqa: E402
 
@@ -93,7 +95,7 @@ def test_oracle_types_sweep_is_clean():
     import subprocess
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/tools/oracle_types.py"],
+        [sys.executable, os.path.join(REPO_ROOT, "tools", "oracle_types.py")],
         capture_output=True,
         text=True,
         timeout=300,

@@ -30,10 +30,12 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import duckdb
 import numpy as np

@@ -11,9 +11,11 @@ Usage: python tools/oracle_types.py  → prints offenders, exit 1 if any.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import duckdb
 

@@ -26,7 +26,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -1327,7 +1328,7 @@ def main() -> int:
         try:
             head = subprocess.run(
                 ["git", "rev-parse", "--short", "HEAD"],
-                capture_output=True, text=True, cwd="/root/repo",
+                capture_output=True, text=True, cwd=REPO_ROOT,
             ).stdout.strip() or "unknown"
         except Exception:  # noqa: BLE001 - provenance is best-effort
             head = "unknown"
