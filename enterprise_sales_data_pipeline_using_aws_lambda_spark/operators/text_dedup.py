@@ -18,7 +18,9 @@ as in Mining of Massive Datasets ch.3 (public).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import weakref
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from .materialize import ensure_min_parallelism, materialize
@@ -48,7 +50,7 @@ def shingle_sets(
 _MERSENNE31 = (1 << 31) - 1
 
 #: Upper bound on |batch| × bands rows the store-backed incremental
-#: path will force-broadcast (see _minhash_against_stored).  4M rows of
+#: path will force-broadcast (see _sign_store_batch).  4M rows of
 #: (band int, bucket long, id long) ≈ 64 MB serialized — the same
 #: order as spark.sql.autoBroadcastJoinThreshold, i.e. the point past
 #: which a forced broadcast stops being obviously safe.
@@ -56,7 +58,7 @@ MAX_STORE_BATCH_BANDED = 4_000_000
 
 #: Upper bound on pair-named corpus ids the store-backed verify stage
 #: will collect and push into the corpus text scan as a literal IN
-#: filter (see _minhash_against_stored).  10k longs is a trivial
+#: filter (see _pairs_against_stored).  10k longs is a trivial
 #: driver collect; past it the verify falls back to the semi-join,
 #: which never collects but cannot prune parquet row groups.
 # One lock with idfilter.MAX_ID_PUSHDOWN (structural alias, not a
@@ -140,14 +142,13 @@ def minhash_signatures(
             F.lit(_MERSENNE31),
         ).alias("_v"),
     )
-    aggs = [
-        F.min(F.when(F.col("_bin") == i, F.col("_v"))).alias(f"_m{i}")
-        for i in range(num_hashes)
-    ]
-    sigs = binned.groupBy(id_col).agg(*aggs).select(
-        F.col(id_col),
-        F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("_raw"),
+    # one SQL expression for the num_hashes per-bin minima: built column
+    # by column they cost ~400 DataFrame-API calls, each a py4j round
+    # trip with call-site capture — ~0.6 s of driver time per signing
+    mins = ", ".join(
+        f"min(CASE WHEN _bin = {i} THEN _v END)" for i in range(num_hashes)
     )
+    sigs = binned.groupBy(id_col).agg(F.expr(f"array({mins})").alias("_raw"))
     # rotation densification: empty bin takes the nearest following
     # non-empty bin's min (wrap-around); global min is the last-resort
     # fallback for pathologically short documents
@@ -316,7 +317,8 @@ def estimate_jaccard_on_pairs(
 
     64 long comparisons per pair — ~50× cheaper than exact set
     intersection — used to discard the long tail of LSH candidates
-    before the exact verify touches shingle arrays."""
+    before the exact verify touches shingle arrays.  Other columns of
+    ``pairs`` ride along, after ``id_a`` and ``id_b``."""
     sa = signatures.select(
         F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a")
     )
@@ -334,8 +336,7 @@ def estimate_jaccard_on_pairs(
         lambda acc, v: acc + v,
     )
     return joined.select(
-        "id_a",
-        "id_b",
+        *pairs.columns,
         (matches / F.size(F.col("sig_a"))).alias("est_jaccard"),
     )
 
@@ -352,7 +353,8 @@ def jaccard_on_pairs(
     ``threshold`` filters on the UNROUNDED ratio (the round(…, 6) in
     the output column is presentation only): filtering post-round would
     admit pairs in [t−5e-7, t) that round up past the cut, silently
-    widening the contract by a rounding ulp."""
+    widening the contract by a rounding ulp.  Other columns of
+    ``pairs`` ride along, before ``jaccard``."""
     sa = shingled.select(
         F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")
     )
@@ -363,14 +365,13 @@ def jaccard_on_pairs(
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
     res = joined.select(
-        "id_a",
-        "id_b",
+        *pairs.columns,
         (inter / F.greatest(union, F.lit(1))).alias("_raw"),
     )
     if threshold is not None:
         res = res.filter(F.col("_raw") >= threshold)
     return res.select(
-        "id_a", "id_b", F.round("_raw", 6).alias("jaccard")
+        *pairs.columns, F.round("_raw", 6).alias("jaccard")
     )
 
 
@@ -436,7 +437,7 @@ def minhash_near_duplicates(
     )
     # Guarded literal-IN pushdown instead of a semi-join (round-13
     # optimization; same rationale and bound as the store-backed
-    # verify in _minhash_against_stored): pair-named ids are usually
+    # verify in _pairs_against_stored): pair-named ids are usually
     # tiny, and a collected isin() reaches the parquet scan as a
     # pushed filter while a semi-join pays a full shuffle + sort of
     # the corpus.  pairs is checkpointed, so the bounded collect is
@@ -514,12 +515,16 @@ def minhash_near_duplicates_against(
     quadratic risk).  The store path removes that linear term:
     measured at 1M+10k in tools/scale_smoke.py, identical pairs."""
     if corpus_signatures is not None:
-        return _minhash_against_stored(
-            corpus, batch, corpus_signatures, corpus_buckets,
-            text_col=text_col, id_col=id_col, n=n,
-            num_hashes=num_hashes, bands=bands, threshold=threshold,
-            estimate_margin=estimate_margin, max_bucket=max_bucket,
+        batch_sigs = _sign_store_batch(
+            batch, text_col=text_col, id_col=id_col, n=n,
+            num_hashes=num_hashes, bands=bands,
         )
+        return _pairs_against_stored(
+            corpus, batch, batch_sigs, corpus_signatures, corpus_buckets,
+            text_col=text_col, id_col=id_col, n=n, bands=bands,
+            threshold=threshold, estimate_margin=estimate_margin,
+            max_bucket=max_bucket,
+        ).drop("_cross")
     if corpus_buckets is not None:
         raise ValueError(
             "corpus_buckets requires corpus_signatures (the estimate "
@@ -567,51 +572,44 @@ def minhash_near_duplicates_against(
     )
 
 
-def _minhash_against_stored(
-    corpus: DataFrame,
+def _observed_pin(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """``df`` pinned, with ``metrics`` observed on the pinning pass —
+    counts and checks cost no job of their own.  The observation sits
+    above ``df``'s last exchange: below one, a zero-row input fails
+    Observation.get."""
+    obs = Observation()
+    pinned = materialize(
+        df.observe(obs, *[m.alias(k) for k, m in metrics.items()])
+    )
+    return pinned, obs.get
+
+
+def _sign_store_batch(
     batch: DataFrame,
-    corpus_signatures: DataFrame,
-    corpus_buckets: DataFrame | None,
     *,
     text_col: str,
     id_col: str,
     n: int,
     num_hashes: int,
     bands: int,
-    threshold: float,
-    estimate_margin: float,
-    max_bucket: int,
 ) -> DataFrame:
-    """Store-backed incremental LSH (the ``corpus_signatures`` branch of
-    :func:`minhash_near_duplicates_against`) — row-identical output to
-    the plain path, with the corpus-linear shingle/sign(/band) stages
-    replaced by store reads.
+    """The batch's pinned ``(id, signature)`` rows — the one pinned
+    frame of the store path's batch side.  Banded rows and verify
+    shingles derive from it (or from ``batch``) lazily.
 
-    Candidate generation mirrors :func:`lsh_candidate_pairs`'s
-    ``new_col`` mode exactly: a bucket qualifies iff its UNION size
-    (stored corpus members + batch members) is ≤ ``max_bucket`` and it
-    holds ≥ 1 batch member — here enforced structurally: only buckets
-    the batch touches are ever inspected (the batch's banded rows, a
-    |batch|×bands frame, BROADCAST into the corpus bucket scan, so the
-    bucket table is never shuffled), singleton buckets yield no pair,
-    and the size filter applies the same total.  Pair orientation is
-    the incremental contract: id_a always a batch doc, id_a < id_b for
-    batch-batch pairs."""
-    batch_sh = materialize(shingle_sets(batch, text_col, id_col, n))
-    batch_sigs = materialize(
-        minhash_signatures(batch_sh, id_col, num_hashes)
+    The store path FORCES the batch's banded rows into broadcasts;
+    like lsh_topk's MAX_QUERY_VECTORS guard, the "batch is small"
+    contract is enforced, not assumed — a fact-sized batch would
+    otherwise OOM the driver instead of degrading.  The row count is
+    an observed metric of the pin itself, so the guard
+    (rows × bands) costs no job."""
+    sigs, seen = _observed_pin(
+        minhash_signatures(
+            shingle_sets(batch, text_col, id_col, n), id_col, num_hashes
+        ),
+        rows=F.count(F.lit(1)),
     )
-    if corpus_buckets is None:
-        corpus_buckets = lsh_banded(corpus_signatures, id_col, bands)
-    batch_banded = materialize(lsh_banded(batch_sigs, id_col, bands))
-    # The no-shuffle invariant below FORCES the batch's banded rows
-    # into broadcasts; like lsh_topk's MAX_QUERY_VECTORS guard, the
-    # "batch is small" contract is enforced, not assumed — a
-    # fact-sized batch would otherwise OOM the driver instead of
-    # degrading.  batch_banded is checkpointed, so the count is a
-    # cheap bounded job.
-    n_banded = batch_banded.limit(MAX_STORE_BATCH_BANDED + 1).count()
-    if n_banded > MAX_STORE_BATCH_BANDED:
+    if seen["rows"] * bands > MAX_STORE_BATCH_BANDED:
         raise ValueError(
             f"store-backed incremental dedup batch exceeds "
             f"{MAX_STORE_BATCH_BANDED} banded rows "
@@ -619,96 +617,119 @@ def _minhash_against_stored(
             f"Split the batch, or run the plain path "
             f"(corpus_signatures=None), which shuffle-joins instead"
         )
-    bn = batch_banded.groupBy("band", "bucket").agg(
-        F.count("*").alias("_bn")
-    )
-    # corpus rows in batch-touched buckets only: the broadcast keeps
-    # the (corpus × bands)-row bucket table map-side — at 100 TB this
-    # is one columnar scan, zero shuffle, output sized by collisions.
-    # The anti-join then removes corpus rows whose id IS a batch id:
-    # ids are unique across frames by contract, so such rows are
-    # always replay artifacts — orphan bucket rows from an append that
-    # crashed between its buckets and signatures writes (see
-    # write_lsh_signature_store), whose ids re-enter via the re-driven
-    # batch.  Without it a batch doc would pair with its own orphan
-    # row (est sees its batch-side signature: jaccard 1.0 → self-drop)
+    return sigs
+
+
+def _pairs_against_stored(
+    corpus: DataFrame,
+    batch: DataFrame,
+    batch_sigs: DataFrame,
+    corpus_signatures: DataFrame,
+    corpus_buckets: DataFrame | None,
+    *,
+    text_col: str,
+    id_col: str,
+    n: int,
+    bands: int,
+    threshold: float,
+    estimate_margin: float,
+    max_bucket: int,
+) -> DataFrame:
+    """Store-backed incremental LSH (the ``corpus_signatures`` branch of
+    :func:`minhash_near_duplicates_against`) — the plain path's rows,
+    with the corpus-linear shingle/sign(/band) stages replaced by store
+    reads.  ``batch_sigs`` is :func:`_sign_store_batch` of ``batch``.
+    Returns ``(id_a, id_b, _cross, jaccard)``: ``_cross`` marks pairs
+    whose ``id_b`` is a corpus doc.
+
+    Candidate generation mirrors :func:`lsh_candidate_pairs`'s
+    ``new_col`` mode exactly: a bucket qualifies iff its UNION size
+    (corpus members + batch members) is ≤ ``max_bucket`` and it holds
+    ≥ 1 batch member.  Only buckets the batch touches are inspected:
+    the batch's banded rows (a |batch|×bands frame) are BROADCAST into
+    the corpus bucket scan, so the bucket table is never shuffled.
+    Pair orientation is the incremental contract: id_a always a batch
+    doc, id_a < id_b for batch-batch pairs."""
+    if corpus_buckets is None:
+        corpus_buckets = lsh_banded(corpus_signatures, id_col, bands)
+    banded = lsh_banded(batch_sigs, id_col, bands)
+    # corpus rows in batch-touched buckets only: at 100 TB one
+    # columnar scan, zero shuffle, output sized by collisions.  The
+    # anti-join then removes corpus rows whose id IS a batch id: ids
+    # are unique across frames by contract, so such rows are always
+    # replay artifacts — orphan bucket rows from an append that crashed
+    # between its buckets and signatures writes (see
+    # _append_store_tables), whose ids re-enter via the re-driven
+    # batch.  Without it a batch doc would pair with its own orphan row
     # and batch-batch pairs could surface in corpus orientation,
-    # inverting the drop rule.  Batch-bounded broadcast anti-join.
-    hits = materialize(
-        corpus_buckets.join(
-            F.broadcast(batch_banded.select("band", "bucket").distinct()),
-            ["band", "bucket"],
-        ).join(
-            F.broadcast(batch_sigs.select(id_col)), id_col, "left_anti"
+    # inverting the drop rule.
+    hits = corpus_buckets.join(
+        F.broadcast(banded.select("band", "bucket")),
+        ["band", "bucket"],
+        "left_semi",
+    ).join(F.broadcast(batch_sigs.select(id_col)), id_col, "left_anti")
+    # ONE grouping per (band, bucket) over batch rows ∪ corpus hits:
+    # batch ids as a list (unique by the entrance contract), corpus ids
+    # as a SET — a crash-healed append leaves benign duplicate bucket
+    # rows, and counting rows would inflate the union-size prune and
+    # silently drop candidates.  Same prune as the plain path: union
+    # bucket size <= max_bucket (a bucket with no corpus member and one
+    # batch member pairs with nothing).
+    members = banded.select(
+        "band", "bucket", F.col(id_col).alias("_b"),
+        F.lit(None).cast(hits.schema[id_col].dataType).alias("_c"),
+    ).unionByName(
+        hits.select(
+            "band", "bucket",
+            F.lit(None).cast(banded.schema[id_col].dataType).alias("_b"),
+            F.col(id_col).alias("_c"),
         )
     )
-    # count DISTINCT ids, not rows: a crash inside a store append
-    # (between the buckets and signatures writes — see
-    # write_lsh_signature_store's append ordering) leaves benign
-    # duplicate bucket rows after the re-driven append; row counts
-    # would inflate the union-size prune and silently drop candidates.
-    cn = hits.groupBy("band", "bucket").agg(
-        F.count_distinct(F.col(id_col)).alias("_cn")
+    buckets = (
+        members.groupBy("band", "bucket")
+        .agg(F.collect_list("_b").alias("_bs"), F.collect_set("_c").alias("_cs"))
+        .filter(F.size("_bs") + F.size("_cs") <= max_bucket)
     )
-    # same prune as the plain path: union bucket size <= max_bucket
-    # (singletons need no explicit prune — a lone batch row pairs with
-    # nothing below)
-    allowed = (
-        bn.join(cn, ["band", "bucket"], "left")
-        .filter(
-            F.col("_bn") + F.coalesce(F.col("_cn"), F.lit(0))
-            <= max_bucket
+
+    def tagged(ids: Column, cross: bool) -> Column:
+        return F.transform(
+            ids, lambda i: F.struct(i.alias("id_b"), F.lit(cross).alias("_cross"))
         )
-        .select("band", "bucket")
-    )
-    a = batch_banded.join(F.broadcast(allowed), ["band", "bucket"]).select(
-        "band", "bucket", F.col(id_col).alias("id_a")
-    )
-    # hits carries no batch ids (anti-joined above), so id_a != id_b
-    # holds structurally; the filter is a zero-cost invariant pin.
-    cross = a.join(
-        hits.select("band", "bucket", F.col(id_col).alias("id_b")),
-        ["band", "bucket"],
-    ).filter(F.col("id_a") != F.col("id_b"))
-    bb = a.join(
-        batch_banded.select(
-            "band", "bucket", F.col(id_col).alias("id_b")
-        ),
-        ["band", "bucket"],
-    ).filter(F.col("id_a") < F.col("id_b"))
-    cand = materialize(
-        cross.select("id_a", "id_b")
-        .unionByName(bb.select("id_a", "id_b"))
-        .distinct()
+
+    # per batch member: every corpus member (no batch id among them,
+    # see the anti-join) and every LARGER batch member
+    a = F.col("id_a")
+    cross = F.count(F.when(F.col("_cross"), 1))
+    cand, seen = _observed_pin(
+        buckets.select(F.explode("_bs").alias("id_a"), "_bs", "_cs")
+        .select(
+            "id_a",
+            F.explode(
+                F.concat(
+                    tagged(F.filter("_cs", lambda c: c != a), True),
+                    tagged(F.filter("_bs", lambda b: b > a), False),
+                )
+            ).alias("_p"),
+        )
+        .select("id_a", "_p.id_b", "_p._cross")
+        .distinct(),
+        cross=cross,
     )
     # The estimate stage's signature lookups are candidate-bounded:
-    # id_a is ALWAYS a batch doc (batch_sigs covers it), and the only
-    # candidate ids needing CORPUS signatures are the cross-pair id_b
-    # set — bb pairs name batch ids on both sides, so they are
-    # anti-joined out of the collected list rather than inflating it
-    # (a batch with heavy internal duplication would otherwise trip
-    # the guard, or widen the pushed In range, on ids that never
-    # touch the corpus table).  So the corpus SIGNATURES table gets
-    # the same guarded literal-In pushdown as the verify stage's text
-    # read, instead of a full columnar scan per batch (signatures are
-    # small next to text, but still corpus-linear: ~520 B/doc).  On
-    # an id-clustered signatures table (sorted at build/compaction;
-    # appends are naturally per-batch-clustered) row-group stats
-    # prune the scan; past the guard the full-table join (AQE
-    # broadcast of cand) takes over unchanged; an all-bb candidate
-    # set skips the corpus signatures read entirely.
-    from .idfilter import collect_ids_bounded
+    # id_a is ALWAYS a batch doc (batch_sigs covers it), and only the
+    # cross pairs' id_b need CORPUS signatures — so the corpus
+    # SIGNATURES table gets the same guarded literal-In pushdown as the
+    # verify stage's text read instead of a full columnar scan per
+    # batch (~520 B/doc, corpus-linear).  On an id-clustered signatures
+    # table (sorted at build/compaction; appends are per-batch
+    # clustered) row-group stats prune the scan; past the guard the
+    # full-table join (AQE broadcast of cand) takes over unchanged; an
+    # all-batch candidate set skips the corpus signatures read.
+    from .idfilter import collect_ids_bounded, in_ids
 
     cand_b = collect_ids_bounded(
-        cand.join(
-            F.broadcast(
-                batch_sigs.select(F.col(id_col).alias("id_b"))
-            ),
-            "id_b",
-            "left_anti",
-        ),
-        "id_b",
-        MAX_VERIFY_ID_PUSHDOWN,
+        cand.filter("_cross"), "id_b", MAX_VERIFY_ID_PUSHDOWN,
+        rows=seen["cross"],
     )
     if cand_b is None:  # over the bound: full-table join fallback
         corpus_sigs = corpus_signatures.select(
@@ -716,57 +737,40 @@ def _minhash_against_stored(
         )
     else:  # exact corpus-side id set ([] -> empty relation, no read)
         corpus_sigs = corpus_signatures.filter(
-            F.col(id_col).isin(cand_b) if cand_b else F.lit(False)
-        ).select(F.col(id_col), F.col("signature"))
+            in_ids(id_col, cand_b)
+        ).select(id_col, "signature")
     sigs_all = batch_sigs.unionByName(corpus_sigs)
     est = estimate_jaccard_on_pairs(cand, sigs_all, id_col)
-    plausible = materialize(
+    plausible, seen = _observed_pin(
         est.filter(
             F.col("est_jaccard") >= threshold - estimate_margin
-        ).select("id_a", "id_b")
+        ).drop("est_jaccard"),
+        cross=cross,
     )
     # exact verify needs shingle SETS — re-shingle ONLY the corpus docs
-    # named in surviving pairs (a candidate-bounded id set), never the
-    # whole corpus.  Corpus-side ids only: id_a is always a batch doc
-    # and bb-pair id_b is too — batch_sh already covers every batch
-    # id, so batch ids in this set would only inflate the pushed In
-    # list (and, in the crash-between-doc-write-and-append window,
-    # pointlessly re-read the half-written lake's copies of the batch
-    # docs).
-    pair_ids = (
-        plausible.select(F.col("id_b").alias(id_col))
-        .distinct()
-        .join(
-            F.broadcast(batch_sigs.select(id_col)),
-            id_col,
-            "left_anti",
-        )
-    )
+    # named in surviving cross pairs (a candidate-bounded id set), never
+    # the whole corpus; the batch side shingles from ``batch``.
     # Literal-IN pushdown instead of a semi-join when the id set is
-    # small (the normal dirty batch: a handful of pair-named docs): a
-    # semi-join never reaches the parquet scan as a pushed filter, so
-    # any surviving pair cost one full-lake text-column read.  A
-    # collected isin() DOES push (PushedFilters: In/range), and on an
-    # id-clustered lake (append_log_idempotent(sort_col=...) /
-    # write_sorted_lake) row-group min/max stats prune the scan to the
-    # few row groups actually holding those docs.  The collect is
-    # guarded the MAX_STORE_BATCH_BANDED way: bounded contract, loud
-    # fallback — past the bound the semi-join path (AQE broadcast)
-    # takes over unchanged.  pair_ids is derived from the checkpointed
-    # `plausible`, so the probe is a cheap bounded job.
-    ids = collect_ids_bounded(pair_ids, id_col, MAX_VERIFY_ID_PUSHDOWN)
+    # small (the normal dirty batch): a semi-join never reaches the
+    # parquet scan as a pushed filter, so any surviving pair would cost
+    # one full-lake text-column read.  A collected In list DOES push
+    # (PushedFilters: In/range), and on an id-clustered lake
+    # (append_log_idempotent(sort_col=...) / write_sorted_lake)
+    # row-group min/max stats prune the scan to the few row groups
+    # holding those docs.  Past the bound the semi-join path (AQE
+    # broadcast) takes over unchanged.  ``plausible`` is checkpointed,
+    # so the probe is a cheap bounded job.
+    pair_ids = plausible.filter("_cross").select(F.col("id_b").alias(id_col))
+    ids = collect_ids_bounded(
+        pair_ids, id_col, MAX_VERIFY_ID_PUSHDOWN, rows=seen["cross"]
+    )
     if ids is None:
-        # over the bound — unhinted semi-join: AQE broadcasts when
-        # the checkpointed pair set is actually small (see
-        # minhash_near_duplicates)
         needed = corpus.join(pair_ids, id_col, "left_semi")
     else:
         # exact corpus-side id set ([] -> empty relation: a clean or
         # batch-internal-only batch never touches corpus text)
-        needed = corpus.filter(
-            F.col(id_col).isin(ids) if ids else F.lit(False)
-        )
-    shingled = batch_sh.unionByName(
+        needed = corpus.filter(in_ids(id_col, ids))
+    shingled = shingle_sets(batch, text_col, id_col, n).unionByName(
         shingle_sets(needed, text_col, id_col, n)
     )
     return jaccard_on_pairs(
@@ -780,8 +784,9 @@ def _minhash_against_stored(
 
 #: Store layout: ``{path}/signatures`` (id, signature array<bigint>),
 #: ``{path}/buckets`` (band int, bucket long, id), ``{path}/meta``
-#: (single-row parquet pinning the sketch parameters).
-_LSH_STORE_TABLES = ("signatures", "buckets", "meta")
+#: (single-row parquet pinning the sketch parameters, with this fixed
+#: schema — read without a schema-inference job).
+_META_SCHEMA = "id_col string, n int, num_hashes int, bands int"
 
 
 def write_lsh_signature_store(
@@ -817,20 +822,10 @@ def write_lsh_signature_store(
       :func:`read_lsh_signature_store` fails loudly instead of passing
       parameter validation against half-rebuilt tables.  Recovery is
       re-running the overwrite.
-    - ``append`` writes ``buckets`` first and ``signatures`` last —
-      the direction :func:`append_batch_signatures`' idempotence
-      anti-join (keyed on signatures, the LAST-written table) can
-      self-heal: a crash between the two leaves orphan bucket rows
-      whose ids are absent from signatures, the re-driven append
-      re-appends BOTH tables (duplicate bucket rows are benign —
-      candidate generation counts distinct ids and de-dups pairs, and
-      store compaction removes them), and no doc is ever left
-      invisible to candidate generation.  The reverse order would
-      strand signatures-without-buckets: the re-driven append would
-      see the ids present and append nothing, permanently hiding
-      those docs from every future batch's bucket probe.  Bare
-      ``mode="append"`` on this function is NOT idempotent — replay
-      protection is :func:`append_batch_signatures`' job."""
+    - ``append`` writes ``buckets`` first and ``signatures`` last (see
+      :func:`_append_store_tables`).  Bare ``mode="append"`` on this
+      function is NOT idempotent — replay protection is
+      :func:`append_batch_signatures`' job."""
     import os
 
     spark = docs.sparkSession
@@ -841,7 +836,7 @@ def write_lsh_signature_store(
         "bands": bands,
     }
     if mode == "append":
-        stored = read_lsh_signature_store(spark, path)["meta"]
+        stored = _read_store_meta(spark, path)
         if stored != meta:
             raise ValueError(
                 f"LSH store parameter mismatch: store has {stored}, "
@@ -855,73 +850,96 @@ def write_lsh_signature_store(
             shingle_sets(docs, text_col, id_col, n), id_col, num_hashes
         )
     )
-    # signatures land id-sorted within each written file set: the
-    # est-stage's pushed candidate-id filter then prunes row groups
-    # (appends are per-batch file sets, so each stays clustered over
-    # its batch's id range; compaction re-sorts globally).  One
-    # range shuffle of docs × ~520 B — trivial per batch, one-time
-    # at build.
-    sorted_sigs = sigs.repartitionByRange(
-        F.col(id_col)
-    ).sortWithinPartitions(id_col)
-    if mode == "overwrite":
-        from ..sources.writers import delete_path
+    if mode == "append":
+        _append_store_tables(sigs, path, id_col, bands)
+        return
+    from ..sources.writers import delete_path
 
-        delete_path(spark, os.path.join(path, "meta"))
-        sorted_sigs.write.mode(mode).parquet(
-            os.path.join(path, "signatures")
-        )
-        lsh_banded(sigs, id_col, bands).write.mode(mode).parquet(
-            os.path.join(path, "buckets")
-        )
-        spark.createDataFrame(
-            [
-                (
-                    meta["id_col"],
-                    meta["n"],
-                    meta["num_hashes"],
-                    meta["bands"],
-                )
-            ],
-            "id_col string, n int, num_hashes int, bands int",
-        ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
-    else:
-        lsh_banded(sigs, id_col, bands).write.mode(mode).parquet(
-            os.path.join(path, "buckets")
-        )
-        sorted_sigs.write.mode(mode).parquet(
-            os.path.join(path, "signatures")
-        )
+    delete_path(spark, os.path.join(path, "meta"))
+    _id_sorted(sigs, id_col).write.mode(mode).parquet(
+        os.path.join(path, "signatures")
+    )
+    lsh_banded(sigs, id_col, bands).write.mode(mode).parquet(
+        os.path.join(path, "buckets")
+    )
+    spark.createDataFrame(
+        [(meta["id_col"], meta["n"], meta["num_hashes"], meta["bands"])],
+        _META_SCHEMA,
+    ).write.mode("overwrite").parquet(os.path.join(path, "meta"))
+
+
+def _id_sorted(sigs: DataFrame, id_col: str) -> DataFrame:
+    """Signatures as they land: id-sorted within each written file set,
+    so the est-stage's pushed candidate-id filter prunes row groups
+    (appends are per-batch file sets, so each stays clustered over its
+    batch's id range; compaction re-sorts globally).  One range
+    shuffle of docs × ~520 B — trivial per batch, one-time at build."""
+    return sigs.repartitionByRange(F.col(id_col)).sortWithinPartitions(
+        id_col
+    )
+
+
+def _append_store_tables(
+    sigs: DataFrame, path: str, id_col: str, bands: int
+) -> None:
+    """Append ``sigs`` (``(id, signature)``, pinned: it feeds both
+    writes) to the store's ``buckets`` and ``signatures`` tables —
+    buckets FIRST, signatures LAST.  That is the direction
+    :func:`append_batch_signatures`' idempotence anti-join (keyed on
+    signatures, the LAST-written table) can self-heal: a crash between
+    the two leaves orphan bucket rows whose ids are absent from
+    signatures, the re-driven append re-appends BOTH tables (duplicate
+    bucket rows are benign — candidate generation counts distinct ids
+    and de-dups pairs, and store compaction removes them), and no doc
+    is ever left invisible to candidate generation.  The reverse order
+    would strand signatures-without-buckets: the re-driven append
+    would see the ids present and append nothing, permanently hiding
+    those docs from every future batch's bucket probe."""
+    import os
+
+    lsh_banded(sigs, id_col, bands).write.mode("append").parquet(
+        os.path.join(path, "buckets")
+    )
+    _id_sorted(sigs, id_col).write.mode("append").parquet(
+        os.path.join(path, "signatures")
+    )
 
 
 def _read_store_meta(spark, path: str) -> dict:
     """The store's meta row as a dict, with recovery guidance when the
-    meta table is absent: meta is deleted first and rewritten last by
-    the overwrite path, so its absence means either no store was ever
-    built here or a rebuild died mid-way.  Meta is the ONE table
-    maintenance never touches, so this read is safe even while the
-    data tables sit mid-swap (compaction crash debris)."""
+    meta table is absent or holds no row: meta is deleted first and
+    rewritten last by the overwrite path, so its absence means either
+    no store was ever built here or a rebuild died mid-way — and a
+    rebuild that died inside the meta write itself leaves a directory
+    holding only ``_temporary/``, which the declared-schema read
+    returns as zero rows.  Meta is the ONE table maintenance never
+    touches, so this read is safe even while the data tables sit
+    mid-swap (compaction crash debris)."""
     import os
 
     from pyspark.errors import AnalysisException
 
+    from ..errors import table_error_condition
+
+    recovery = (
+        f"no LSH signature store at {path}: the meta table is missing "
+        f"or empty — either nothing was built here, or an overwrite "
+        f"rebuild crashed mid-way (meta is written last).  Recover by "
+        f"re-running write_lsh_signature_store(mode='overwrite')"
+    )
     try:
-        return (
-            spark.read.parquet(os.path.join(path, "meta"))
-            .first().asDict()
+        row = (
+            spark.read.schema(_META_SCHEMA)
+            .parquet(os.path.join(path, "meta"))
+            .first()
         )
     except AnalysisException as e:
-        from ..errors import table_error_condition
-
         if table_error_condition(e) == "PATH_NOT_FOUND":
-            raise ValueError(
-                f"no LSH signature store at {path}: the meta table is "
-                f"missing — either nothing was built here, or an "
-                f"overwrite rebuild crashed mid-way (meta is written "
-                f"last).  Recover by re-running "
-                f"write_lsh_signature_store(mode='overwrite')"
-            ) from e
+            raise ValueError(recovery) from e
         raise
+    if row is None:
+        raise ValueError(recovery)
+    return row.asDict()
 
 
 def read_lsh_signature_store(spark, path: str) -> dict:
@@ -932,7 +950,10 @@ def read_lsh_signature_store(spark, path: str) -> dict:
     ``meta`` matches the n/num_hashes/bands they pass the operator.
 
     A store with no readable meta raises with recovery guidance (see
-    :func:`_read_store_meta`)."""
+    :func:`_read_store_meta`).  The data tables keep schema inference:
+    a declared-schema read of a directory a crashed overwrite left
+    holding only ``_temporary/`` would return zero rows instead of
+    failing."""
     import os
 
     m = _read_store_meta(spark, path)
@@ -943,6 +964,22 @@ def read_lsh_signature_store(spark, path: str) -> dict:
         "buckets": spark.read.parquet(os.path.join(path, "buckets")),
         "meta": m,
     }
+
+
+#: Pinned ``(id, signature)`` rows of each ``clean`` frame
+#: :func:`ingest_dedup_batch` returned, with the store meta they were
+#: built with: :func:`append_batch_signatures` appends these instead of
+#: re-shingling and re-signing the same docs.  Weak keys: an entry
+#: goes with its frame (DataFrame hashes by identity).
+_SIGNED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _check_store_key(meta: dict, store_path: str, id_col: str) -> None:
+    if meta["id_col"] != id_col:
+        raise ValueError(
+            f"LSH store at {store_path} is keyed on "
+            f"{meta['id_col']!r}, not {id_col!r}"
+        )
 
 
 def ingest_dedup_batch(
@@ -1004,55 +1041,65 @@ def ingest_dedup_batch(
     now-stored survivors, and :func:`append_batch_signatures`' own
     anti-join appends nothing.
 
-    Per-batch cost is the store fast path's: batch-linear shingle/sign/
-    band work, one columnar pass over the bucket table, plus two
-    id-column-only store scans (the pre-filter here and the append's
-    anti-join) — never corpus-linear text work: the exact verify's
-    text fetch pushes the pair-named id set into the lake scan as a
-    literal In filter, so a lake written id-clustered (the
+    Per-batch cost: the store is read once (meta with its declared
+    schema; signatures and buckets planned, not scanned), and each
+    step's work is pinned once — the entrance (deduplicated, its id
+    checks observed on the pin), the store pre-filter, the signatures
+    (their row count observed for the size guard), the candidates,
+    estimates and pairs, and ``clean``.  The counts observed on the
+    pins let every id collect run as one job.  Store-side work is one
+    columnar pass over the bucket table and one pushed-id probe of the
+    signatures table, never corpus-linear text work: the exact
+    verify's text fetch pushes the pair-named id set into the lake
+    scan as a literal In filter, so a lake written id-clustered (the
     ``sort_col=`` append above) reads a few row groups per dirty
-    batch, not the text column.  Ids must be unique
-    across lake and batch (the operator's keyed contract); within the
-    batch, exact redelivered rows (same id AND text) collapse silently,
-    while the same id carrying different text raises."""
+    batch.  ``clean`` is returned pinned, and its signatures are kept
+    for :func:`append_batch_signatures`, which appends them without
+    signing the docs again.  Ids must be unique across lake and batch
+    (the operator's keyed contract); within the batch, exact
+    redelivered rows (same id AND text) collapse silently, while the
+    same id carrying different text raises."""
+    from .idfilter import anti_join_ids, collect_ids_bounded, in_ids
+
     spark = batch.sparkSession
     store = read_lsh_signature_store(spark, store_path)
     meta = store["meta"]
-    if meta["id_col"] != id_col:
-        raise ValueError(
-            f"LSH store at {store_path} is keyed on "
-            f"{meta['id_col']!r}, not {id_col!r}"
-        )
-    # Within-batch id hygiene at the ingest entrance: an exact
-    # redelivered row (same id, same text — e.g. one file landing twice
-    # in one drain) collapses silently; the same id carrying DIFFERENT
-    # text is a keyed-contract violation that would otherwise admit
-    # duplicate rows downstream, so it fails loudly here.  Both probes
-    # are batch-bounded jobs.
-    # materialize: the deduped frame feeds three separate jobs (the
-    # conflict probe, the anti-join's id collect, the fresh pin) —
-    # unpinned, each re-runs the dedup shuffle from the source
-    batch = materialize(
-        batch.select(id_col, text_col).dropDuplicates(
-            [id_col, text_col]
-        )
+    _check_store_key(meta, store_path, id_col)
+    rows = F.count(F.lit(1))
+    # Within-batch id hygiene at the ingest entrance, as metrics of the
+    # pin: an exact redelivered row (same id, same text — e.g. one file
+    # landing twice in one drain) collapses silently; the same id
+    # carrying DIFFERENT text is a keyed-contract violation that would
+    # otherwise admit duplicate rows downstream, so it fails loudly
+    # here.  A NULL id breaks every keyed mechanism downstream: it
+    # passes every anti-join (NULL never equals a store id), never
+    # forms dedup pairs, lands in the lake — and then WEDGES a
+    # streaming replay, whose divergence probe can never match the NULL
+    # id in the committed partition.  One id-partitioned shuffle serves
+    # the dedup, the per-id count, and the later id probes.
+    batch, checks = _observed_pin(
+        batch.select(id_col, text_col)
+        .repartition(spark.sparkContext.defaultParallelism, id_col)
+        .dropDuplicates([id_col, text_col])
+        .withColumn(
+            "_id_rows", F.count(F.lit(1)).over(Window.partitionBy(id_col))
+        ),
+        rows=rows,
+        conflicted=F.count(F.when(F.col("_id_rows") > 1, 1)),
+        null_ids=F.count(F.when(F.col(id_col).isNull(), 1)),
     )
-    conflicted = (
-        batch.groupBy(id_col).count().filter(F.col("count") > 1)
-    )
-    if not conflicted.isEmpty():
-        sample = [r[id_col] for r in conflicted.limit(5).collect()]
+    batch = batch.drop("_id_rows")
+    if checks["conflicted"]:
+        sample = [
+            r[id_col] for r in batch.groupBy(id_col).count()
+            .filter(F.col("count") > 1).limit(5).collect()
+        ]
         raise ValueError(
             f"batch carries the same {id_col} with DIFFERENT text "
             f"(e.g. {sample}): ids must identify one document "
             f"(the keyed contract); fix the upstream delivery"
         )
-    # A NULL id breaks every keyed mechanism downstream: it passes
-    # every anti-join (NULL never equals a store id), never forms
-    # dedup pairs, lands in the lake — and then WEDGES a streaming
-    # replay, whose divergence probe can never match the NULL id in
-    # the committed partition.  Fail at the entrance instead.
-    if not batch.filter(F.col(id_col).isNull()).isEmpty():
+    if checks["null_ids"]:
         raise ValueError(
             f"batch carries rows with NULL {id_col}: the keyed "
             f"exactly-once contract needs every row identified — "
@@ -1062,30 +1109,20 @@ def ingest_dedup_batch(
     # delivery — the guarded pushed-filter anti-join bounds the store
     # read to the row groups that could hold the batch's ids (see
     # operators.idfilter), falling back to the full id-column scan
-    # past the guard.  materialize: fresh feeds the dedup, the
-    # drop-rule id set, and the final anti-join — unpinned it would
-    # re-run the store probe per consumer, and with the checkpointed
-    # pairs below it leaves ZERO live store scans in the returned
-    # frames, so `clean` is pinned at ingest time (re-evaluating it
-    # after an append cannot shift it).
-    from .idfilter import anti_join_ids
-
+    # past the guard.  materialize: fresh feeds the signatures, the
+    # verify shingles and `clean` — unpinned it would re-run the store
+    # probe per consumer, and with every later frame pinned it leaves
+    # ZERO live store scans in the returned frames, so `clean` cannot
+    # shift when re-evaluated after an append.
     fresh = materialize(
-        anti_join_ids(batch, store["signatures"], id_col)
+        anti_join_ids(
+            batch, store["signatures"], id_col, rows=checks["rows"]
+        )
     )
-    pairs = minhash_near_duplicates_against(
-        corpus,
-        fresh,
-        text_col=text_col,
-        id_col=id_col,
-        n=meta["n"],
-        num_hashes=meta["num_hashes"],
-        bands=meta["bands"],
-        threshold=threshold,
-        estimate_margin=estimate_margin,
-        max_bucket=max_bucket,
-        corpus_signatures=store["signatures"],
-        corpus_buckets=store["buckets"],
+    sketch = dict(text_col=text_col, id_col=id_col, n=meta["n"])
+    sigs = _sign_store_batch(
+        fresh, num_hashes=meta["num_hashes"], bands=meta["bands"],
+        **sketch,
     )
     # distinct: a safety net against duplicate evidence rows (the
     # historical source — the crash-between-doc-write-and-append
@@ -1093,30 +1130,42 @@ def ingest_dedup_batch(
     # verify re-shingled a pair-named batch id twice — is gone now
     # that the verify read is corpus-side-only, but the net is
     # near-dup-count-sized and a convergence contract shouldn't lean
-    # on the optimization that made it vacuous).  materialize:
-    # dropped consumes pairs twice and clean consumes dropped, and the
-    # verify stage above them ends in a corpus-text semi-join — without
-    # the checkpoint that corpus scan re-runs per consumer (measured:
-    # 30.1 s → 21.4 s for the composed 1M+10k ingest).  The pairs frame
-    # is near-dup-count-sized, so both are ~free.
-    pairs = materialize(pairs.distinct())
-    batch_ids_b = fresh.select(F.col(id_col).alias("id_b"))
-    dropped = (
-        # batch-batch pairs (both batch): the larger id drops.  The
-        # engine emits these (min, max)-oriented, so greatest() ==
-        # id_b today — stating the RULE rather than the orientation
-        # keeps the drop correct even if a future candidate path
-        # surfaces a batch-batch pair corpus-oriented.
-        pairs.join(batch_ids_b, "id_b", "left_semi")
-        .select(F.greatest("id_a", "id_b").alias(id_col))
-        .unionByName(
-            # batch-vs-corpus pairs: the batch side (always id_a) drops
-            pairs.join(batch_ids_b, "id_b", "left_anti")
-            .select(F.col("id_a").alias(id_col))
-        )
-        .distinct()
+    # on the optimization that made it vacuous).  materialize: the
+    # verify stage ends in a corpus-text read, and both the drop rule
+    # and the caller consume the pairs.
+    pairs, seen = _observed_pin(
+        _pairs_against_stored(
+            corpus, fresh, sigs, store["signatures"], store["buckets"],
+            bands=meta["bands"], threshold=threshold,
+            estimate_margin=estimate_margin, max_bucket=max_bucket,
+            **sketch,
+        ).distinct(),
+        rows=rows,
     )
-    return fresh.join(dropped, id_col, "left_anti"), pairs
+    # batch-vs-corpus pairs drop the batch side (always id_a);
+    # batch-batch pairs drop the larger id — stating the RULE rather
+    # than the (min, max) orientation the engine emits keeps the drop
+    # correct even if a future candidate path surfaces a batch-batch
+    # pair the other way round.
+    dropped = pairs.select(
+        F.when(F.col("_cross"), F.col("id_a"))
+        .otherwise(F.greatest("id_a", "id_b"))
+        .alias(id_col)
+    )
+    # The drop set is near-dup-count-sized: collected, it filters
+    # `fresh` and the signatures alike, with no join to plan.
+    drop_ids = collect_ids_bounded(
+        dropped, id_col, MAX_VERIFY_ID_PUSHDOWN, rows=seen["rows"]
+    )
+
+    def admitted(df: DataFrame) -> DataFrame:
+        if drop_ids is None:  # over the bound: broadcast anti-join
+            return df.join(F.broadcast(dropped), id_col, "left_anti")
+        return df.filter(~in_ids(id_col, drop_ids))
+
+    clean, seen = _observed_pin(admitted(fresh), rows=rows)
+    _SIGNED[clean] = (admitted(sigs), meta, seen["rows"])
+    return clean, pairs.drop("_cross")
 
 
 def _fence_lsh_append(spark, store_path: str) -> None:
@@ -1172,12 +1221,17 @@ def append_batch_signatures(
     would instead skip the re-append and permanently hide the docs
     from bucket probes.  Sketch parameters come from the store's own
     meta — a caller cannot drift them.  Returns the number of docs
-    appended (0 on a fully-replayed batch).
+    appended (0 on a fully-replayed batch); a doc with NULL text has
+    no shingles, gets no signature and is not counted.
 
-    ``clean`` is localCheckpointed before the anti-join: a frame from
-    :func:`ingest_dedup_batch` carries scans of THIS store's parquet
-    from before any intervening append, and mixing two vintages of the
-    same path in one plan lets Spark canonicalize the fresh scan away —
+    A ``clean`` frame :func:`ingest_dedup_batch` returned is pinned
+    with its signatures, built with the store meta of that call: when
+    the meta still matches, those signature rows are appended (after
+    the anti-join) and the docs are not shingled or signed again.  Any
+    other frame is localCheckpointed before the anti-join and signed
+    here: a frame built over THIS store's parquet carries scans from
+    before any intervening append, and mixing two vintages of the same
+    path in one plan lets Spark canonicalize the fresh scan away —
     measured: a stale frame re-appended every row until the checkpoint
     cut its file-scan lineage.  The frame is batch-bounded, so the
     checkpoint is cheap.
@@ -1197,6 +1251,8 @@ def append_batch_signatures(
     staleness window (``lease_stale_after_s``, default
     ``writers.WRITER_LEASE_STALE_AFTER_S``) gates crash RECOVERY
     latency, not the append's duration."""
+    import os
+
     from ..sources.writers import writer_lease
 
     spark = clean.sparkSession
@@ -1205,18 +1261,35 @@ def append_batch_signatures(
         stale_after_s=lease_stale_after_s,
     ):
         _fence_lsh_append(spark, store_path)
-        clean = materialize(clean)
-        store = read_lsh_signature_store(spark, store_path)
-        meta = store["meta"]
-        if meta["id_col"] != id_col:
-            raise ValueError(
-                f"LSH store at {store_path} is keyed on "
-                f"{meta['id_col']!r}, not {id_col!r}"
-            )
+        meta = _read_store_meta(spark, store_path)
+        _check_store_key(meta, store_path, id_col)
+        signed = _SIGNED.get(clean)
+        presigned = signed is not None and signed[1] == meta
+        if presigned:
+            rows, _, n_rows = signed
+        else:
+            rows, n_rows = materialize(clean).select(id_col, text_col), None
         from .idfilter import anti_join_ids
 
-        fresh = anti_join_ids(clean, store["signatures"], id_col)
-        n_new = fresh.count()  # batch-bounded: one cheap job
+        count = F.count(F.lit(1))
+        fresh, seen = _observed_pin(
+            anti_join_ids(
+                rows,
+                spark.read.parquet(os.path.join(store_path, "signatures")),
+                id_col,
+                rows=n_rows,
+            ),
+            rows=count,
+        )
+        if not presigned and seen["rows"]:
+            fresh, seen = _observed_pin(
+                minhash_signatures(
+                    shingle_sets(fresh, text_col, id_col, meta["n"]),
+                    id_col, meta["num_hashes"],
+                ),
+                rows=count,
+            )
+        n_new = seen["rows"]
         if n_new:
             # re-check at the write (the _fence_ivf_append treatment):
             # the anti-join above takes real time.  Under the lease
@@ -1225,16 +1298,7 @@ def append_batch_signatures(
             # violations loud on object stores where the lease's
             # atomic create degrades to advisory.
             _fence_lsh_append(spark, store_path)
-            write_lsh_signature_store(
-                fresh,
-                store_path,
-                text_col=text_col,
-                id_col=id_col,
-                n=meta["n"],
-                num_hashes=meta["num_hashes"],
-                bands=meta["bands"],
-                mode="append",
-            )
+            _append_store_tables(fresh, store_path, id_col, meta["bands"])
         return n_new
 
 

@@ -131,7 +131,17 @@ def read_serving_table(
     (connection refused, auth, timeout) re-raises.  Swallowing those
     would be catastrophic downstream — the upsert would treat the
     serving table as empty and the subsequent overwrite would destroy
-    it while reporting success."""
+    it while reporting success.
+
+    The parquet stand-in checks the directory with the Hadoop FS first
+    (as :func:`append_log_idempotent` does): a missing table costs no
+    failed read and logs no stack trace.  A directory that exists but
+    holds no readable file (a torn overwrite) still fails the read."""
+    if not jdbc_url:
+        sc = spark.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(f"{warehouse_dir}/{table}")
+        if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
+            return None
     try:
         if jdbc_url:
             return spark.read.jdbc(
@@ -463,7 +473,7 @@ def append_log_idempotent(
     :func:`write_sorted_lake` property, per batch partition.  Point
     and IN() predicates on the column then prune row groups instead of
     scanning the batch; the store-backed dedup verify
-    (``text_dedup._minhash_against_stored``) pushes exactly such a
+    (``text_dedup._pairs_against_stored``) pushes exactly such a
     filter, so an ingest lake written with ``sort_col=id_col`` pays a
     few row groups per dirty batch instead of a full-lake text read.
     Cost: one batch-bounded range shuffle + local sort per append."""

@@ -434,46 +434,6 @@ def test_sales_feed_python_datasource(spark, tmp_path):
     assert n == 3
 
 
-def test_observed_metrics_ride_the_write_job(spark, tmp_path):
-    """df.observe metrics arrive with the WRITE action itself — no
-    second scan; the reference's bookkeeping counts at 100 TB scale."""
-    from pyspark.sql import functions as F
-
-    from enterprise_sales_data_pipeline_using_aws_lambda_spark.operators.observe import (
-        ingest_metrics,
-        observed,
-    )
-
-    df = spark.range(100).select(
-        F.col("id").alias("uuid"),
-        (F.col("id") % 7).alias("bucket"),
-        F.when(F.col("id") % 10 == 0, None)
-        .otherwise(F.col("id") * 1.5)
-        .alias("amount"),
-    )
-    out, obs = observed(
-        df,
-        "write-metrics",
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.col("amount").isNull().cast("long")).alias("null_amounts"),
-    )
-    out.write.mode("overwrite").parquet(str(tmp_path / "t"))
-    m = obs.get
-    assert m["rows"] == 100
-    assert m["null_amounts"] == 10
-
-    # the standard ingest set (uuid-keyed), incl. the
-    # approx_count_distinct workaround for observe's DISTINCT ban
-    df2 = df.withColumn("uuid", F.when(F.col("uuid") < 95, F.col("uuid")))
-    out2, obs2 = ingest_metrics(df2)
-    out2.write.mode("overwrite").parquet(str(tmp_path / "t2"))
-    m2 = obs2.get
-    assert m2["n_rows"] == 100
-    assert m2["n_null_keys"] == 5
-    # approx distinct of 95 true keys: rsd default 5%
-    assert abs(m2["n_keys_approx"] - 95) <= 10
-
-
 def test_sales_feed_malformed_cells_null_out(spark, tmp_path):
     """Permissive-mode parity: a malformed numeric cell nulls the
     value; it never fails the file or the job."""

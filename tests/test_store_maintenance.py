@@ -477,6 +477,135 @@ def test_overwrite_crash_leaves_store_unreadable(
     ] == 32
 
 
+def test_torn_meta_raises_recovery_error(spark, tmp_path):
+    """A meta overwrite that crashed mid-commit leaves a directory
+    holding only ``_temporary/``.  The declared-schema meta read returns
+    no row there; the store must raise its recovery ValueError, not
+    fail on the missing row."""
+    import shutil
+
+    from enterprise_sales_data_pipeline_using_aws_lambda_spark.operators import (
+        text_dedup,
+    )
+
+    store = str(tmp_path / "store")
+    docs = spark.createDataFrame([(1, X)], "doc_id long, text string")
+    text_dedup.write_lsh_signature_store(docs, store)
+    meta = os.path.join(store, "meta")
+    shutil.rmtree(meta)
+    os.makedirs(os.path.join(meta, "_temporary", "0"))
+    with pytest.raises(ValueError, match="missing or empty"):
+        text_dedup.read_lsh_signature_store(spark, store)
+    with pytest.raises(ValueError, match="missing or empty"):
+        text_dedup.ingest_dedup_batch(docs, docs, store)
+
+
+def test_dedup_transaction_job_counts(spark, tmp_path, monkeypatch):
+    """One store-backed dedup transaction, counted per step in the
+    caller's job group: the ingest, the id-clustered lake append and
+    the signature append launch a pinned number of Spark jobs (no job
+    escapes the group).  The append of a frame the ingest returned
+    reuses its pinned signatures — no shingling in the append — and
+    they equal freshly computed ones; a replayed batch appends nothing;
+    a handmade frame is signed in the append; a zero-row batch runs
+    the whole transaction (its observed counts read 0)."""
+    from enterprise_sales_data_pipeline_using_aws_lambda_spark.operators import (
+        text_dedup,
+    )
+    from enterprise_sales_data_pipeline_using_aws_lambda_spark.sources.writers import (
+        append_log_idempotent,
+    )
+
+    schema = "doc_id long, text string"
+    lake, store = str(tmp_path / "lake"), str(tmp_path / "store")
+    corpus = spark.createDataFrame([(101, X), (102, Y)], schema)
+    assert append_log_idempotent(spark, corpus, lake, "b0")
+    text_dedup.write_lsh_signature_store(corpus, store, num_hashes=16, bands=4)
+
+    def lake_docs():
+        return spark.read.parquet(lake).select("doc_id", "text")
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, fn):
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    shingled = []
+    real_shingle = text_dedup.shingle_sets
+
+    def counting_shingle(*a, **k):
+        shingled.append(1)
+        return real_shingle(*a, **k)
+
+    # 1 duplicates corpus X; 2/3 duplicate each other; 4 is novel
+    batch = spark.createDataFrame([(1, X), (2, Z), (3, Z), (4, U)], schema)
+    (clean, pairs), n_ingest = jobs(
+        "dedup_ingest",
+        lambda: text_dedup.ingest_dedup_batch(lake_docs(), batch, store),
+    )
+    assert {r["doc_id"] for r in clean.collect()} == {2, 4}
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == {
+        (1, 101), (2, 3),
+    }
+    _, n_lake = jobs(
+        "dedup_lake",
+        lambda: append_log_idempotent(
+            spark, clean, lake, "b1", sort_col="doc_id", sort_files=4,
+        ),
+    )
+    monkeypatch.setattr(text_dedup, "shingle_sets", counting_shingle)
+    n_new, n_append = jobs(
+        "dedup_append",
+        lambda: text_dedup.append_batch_signatures(
+            clean, store, lease_token="append:b1"
+        ),
+    )
+    assert n_new == 2 and not shingled
+    assert (n_ingest, n_lake, n_append) == (32, 3, 9)
+    monkeypatch.setattr(text_dedup, "shingle_sets", real_shingle)
+
+    # a replayed batch pre-filters to nothing and appends nothing
+    clean_r, _ = text_dedup.ingest_dedup_batch(lake_docs(), batch, store)
+    assert clean_r.count() == 0
+    assert text_dedup.append_batch_signatures(clean_r, store) == 0
+    assert text_dedup.append_batch_signatures(clean, store) == 0
+
+    # a handmade frame is signed in the append
+    hand = spark.createDataFrame([(5, W)], schema)
+    monkeypatch.setattr(text_dedup, "shingle_sets", counting_shingle)
+    assert text_dedup.append_batch_signatures(hand, store) == 1
+    assert shingled
+    monkeypatch.setattr(text_dedup, "shingle_sets", real_shingle)
+    want = {
+        r["doc_id"]: list(r["signature"])
+        for r in text_dedup.minhash_signatures(
+            real_shingle(spark.createDataFrame([(2, Z), (4, U), (5, W)], schema)),
+            num_hashes=16,
+        ).collect()
+    }
+    st = text_dedup.read_lsh_signature_store(spark, store)
+    got = {
+        r["doc_id"]: list(r["signature"])
+        for r in st["signatures"].filter(F.col("doc_id") < 100).collect()
+    }
+    assert got == want
+    assert st["buckets"].filter(F.col("doc_id") < 100).count() == 3 * 4
+
+    # a zero-row batch
+    empty = spark.createDataFrame([], schema)
+    clean_e, pairs_e = text_dedup.ingest_dedup_batch(lake_docs(), empty, store)
+    assert clean_e.count() == 0 and pairs_e.count() == 0
+    assert text_dedup.append_batch_signatures(clean_e, store) == 0
+
+
 def _mk_vec_rows(ids, base):
     # two far-apart clusters around +/-base so a 2-list codebook splits
     rows = []

@@ -2,6 +2,7 @@
 where ground truth is known (the synthetic documents table has no
 labeled near-dups)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from enterprise_sales_data_pipeline_using_aws_lambda_spark.operators.text_analysis import (
@@ -797,6 +798,99 @@ def test_minhash_against_store_path_row_identical(spark, tmp_path):
         write_lsh_signature_store(
             batch, store_path, mode="append", num_hashes=32, bands=8
         )
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+def test_store_candidates_equal_plain_path(spark, tmp_path, seed):
+    """The store path's one (band, bucket) grouping returns the plain
+    path's rows on seeded corpora with planted near-dups of corpus
+    docs, batch-batch pairs, a cluster over ``max_bucket`` (pruned by
+    both paths) and a cluster exactly AT it whose corpus members carry
+    the duplicate bucket rows a crash-healed append leaves behind.
+    The prune must count distinct corpus ids: counting bucket rows
+    would push the at-bound cluster over and drop its pairs."""
+    import os
+    import random
+
+    from enterprise_sales_data_pipeline_using_aws_lambda_spark.operators.text_dedup import (  # noqa: E501
+        lsh_banded,
+        minhash_near_duplicates_against,
+        minhash_signatures,
+        read_lsh_signature_store,
+        write_lsh_signature_store,
+    )
+
+    rng = random.Random(seed)
+    vocab = [
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz")
+                for _ in range(rng.randint(4, 9)))
+        for _ in range(400)
+    ]
+
+    def doc():
+        return " ".join(rng.choice(vocab) for _ in range(12))
+
+    def near(text):
+        words = text.split()
+        words[rng.randrange(len(words))] = "zqzqzq"
+        return " ".join(words)
+
+    at_bound, oversize, pair_src = doc(), doc(), doc()
+    corpus = [(i, doc()) for i in range(1, 41)] + [
+        (41, at_bound), (42, at_bound),
+        (43, oversize), (44, oversize), (45, oversize),
+    ]
+    batch = (
+        [(1001 + j, near(corpus[j][1])) for j in range(8)]
+        + [(1010, pair_src), (1011, near(pair_src))]
+        + [(1012, at_bound), (1013, at_bound)]
+        + [(1014, oversize), (1015, oversize), (1016, oversize)]
+        + [(1020 + j, doc()) for j in range(6)]
+    )
+    schema = "doc_id long, text string"
+    corpus_df = spark.createDataFrame(corpus, schema)
+    batch_df = spark.createDataFrame(batch, schema)
+    sketch = dict(num_hashes=16, bands=4)
+
+    # the store as a crash-healed append leaves it: docs 1-4 and 41
+    # landed in buckets, the append crashed before signatures, and the
+    # re-driven append wrote both tables again
+    healed = {1, 2, 3, 4, 41}
+    store = str(tmp_path / "store")
+    write_lsh_signature_store(
+        corpus_df.filter(~F.col("doc_id").isin(healed)), store, **sketch
+    )
+    healed_df = corpus_df.filter(F.col("doc_id").isin(healed))
+    lsh_banded(
+        minhash_signatures(shingle_sets(healed_df), num_hashes=16), bands=4
+    ).write.mode("append").parquet(os.path.join(store, "buckets"))
+    write_lsh_signature_store(healed_df, store, mode="append", **sketch)
+    st = read_lsh_signature_store(spark, store)
+    assert st["buckets"].count() > st["buckets"].distinct().count()
+
+    def rows(**kw):
+        return {
+            tuple(r) for r in minhash_near_duplicates_against(
+                corpus_df, batch_df, threshold=0.5, max_bucket=4,
+                **sketch, **kw,
+            ).collect()
+        }
+
+    plain = rows()
+    assert rows(corpus_signatures=st["signatures"],
+                corpus_buckets=st["buckets"]) == plain
+    assert rows(corpus_signatures=st["signatures"]) == plain
+
+    ids = {(a, b) for a, b, _ in plain}
+    # at the bound: kept, in both orientations the contract names
+    assert {(1012, 41), (1012, 42), (1013, 41), (1013, 42),
+            (1012, 1013)} <= ids
+    # over the bound: pruned
+    big = {43, 44, 45, 1014, 1015, 1016}
+    assert not {p for p in ids if set(p) <= big}
+    # planted near-dups of corpus docs surface as cross pairs
+    assert {(1001 + j, j + 1) for j in range(8)} & ids
+    assert all(a > 1000 for a, _ in ids)
 
 
 def test_minhash_against_store_guards_fact_sized_batch(
